@@ -4,6 +4,8 @@ path, row-group split distribution, and read_range over file ordering."""
 from __future__ import annotations
 
 import os
+import time
+import uuid
 
 import numpy as np
 import pyarrow as pa
@@ -12,7 +14,8 @@ from pyspark.sql import functions as F
 
 from tokenc.datagen import TOKENS_ARROW_SCHEMA, synth_tokens_df
 from tokenc.engine import decode_df, encode_df, read_range
-from tokenc.files import encode_files, list_parquet_files
+from tokenc.files import (decode_files, decode_invariants_files,
+                          encode_files, list_parquet_files)
 from tokenc.schema import specs_from_arrow_schema
 
 SPECS = specs_from_arrow_schema(TOKENS_ARROW_SCHEMA)
@@ -24,6 +27,36 @@ def src_dir(spark, tmp_path_factory):
     synth_tokens_df(spark, 2000, seed=7, mean_tokens=64, partitions=6) \
         .write.mode("overwrite").parquet(d)
     return d
+
+
+@pytest.fixture(scope="module")
+def enc_dir(spark, src_dir, tmp_path_factory):
+    d = str(tmp_path_factory.mktemp("enc"))
+    encode_files(spark, src_dir, SPECS, target_raw_bytes=256 << 10) \
+        .write.mode("overwrite").parquet(d)
+    return d
+
+
+def _tasks_to_collect(spark, df) -> int:
+    """Tasks the jobs of `df.collect()` ran, counted with the public status
+    tracker under a job group of its own."""
+    sc = spark.sparkContext
+    group = f"launch-shape-{uuid.uuid4().hex}"
+    sc.setJobGroup(group, "launch shape")
+    try:
+        df.collect()
+    finally:
+        sc.setLocalProperty("spark.jobGroup.id", None)
+    st = sc.statusTracker()
+    deadline = time.monotonic() + 30
+    while True:  # job-end events reach the tracker asynchronously
+        jobs = [st.getJobInfo(j) for j in st.getJobIdsForGroup(group)]
+        if jobs and all(j is not None and j.status == "SUCCEEDED"
+                        for j in jobs):
+            break
+        assert time.monotonic() < deadline, "jobs never finished"
+        time.sleep(0.05)
+    return sum(st.getStageInfo(s).numTasks for j in jobs for s in j.stageIds)
 
 
 class TestEncodeFiles:
@@ -120,13 +153,6 @@ class TestEncodeFiles:
 
 
 class TestDecodeFiles:
-    @pytest.fixture(scope="class")
-    def enc_dir(self, spark, src_dir, tmp_path_factory):
-        d = str(tmp_path_factory.mktemp("enc"))
-        encode_files(spark, src_dir, SPECS, target_raw_bytes=256 << 10) \
-            .write.mode("overwrite").parquet(d)
-        return d
-
     def test_decode_files_bit_identity(self, spark, src_dir, enc_dir):
         from tokenc.files import decode_files
 
@@ -163,6 +189,43 @@ class TestDecodeFiles:
                  .agg(F.sum("n_rows"), F.sum("num_sum")).collect()[0])
         assert three[0] == 3 * one[0]
         assert abs(three[1] - 3 * one[1]) < 1e-6 * max(abs(three[1]), 1)
+
+
+class TestLaunchShape:
+    """The file drivers launch one task per slice of the file list from
+    spark.range: a single stage of min(n_files, defaultParallelism) tasks
+    with no shuffle in front of the UDF."""
+
+    @pytest.mark.parametrize("n_files", [2, None])
+    @pytest.mark.parametrize("driver", ["encode_files", "decode_files",
+                                        "decode_invariants_files"])
+    def test_no_exchange_one_task_per_core(self, spark, src_dir, enc_dir,
+                                           driver, n_files):
+        if driver == "encode_files":
+            files = list_parquet_files(src_dir)[:n_files]
+            df = encode_files(spark, files, SPECS)
+        elif driver == "decode_files":
+            files = list_parquet_files(enc_dir)[:n_files]
+            df = decode_files(spark, files, SPECS, TOKENS_ARROW_SCHEMA)
+        else:
+            files = list_parquet_files(enc_dir)[:n_files]
+            df = decode_invariants_files(spark, files, SPECS)
+        assert len(files) >= 2
+        plan = df._jdf.queryExecution().executedPlan().toString()
+        assert "MapInArrow" in plan and "Exchange" not in plan, plan
+        assert _tasks_to_collect(spark, df) == min(
+            len(files), spark.sparkContext.defaultParallelism)
+
+    def test_decode_rows_in_file_order(self, spark, enc_dir):
+        from tokenc.local import read_table
+
+        want = [x for f in list_parquet_files(enc_dir)
+                for x in read_table(f, SPECS, columns=["doc_id"])
+                ["doc_id"].to_pylist()]
+        got = [r.doc_id for r in
+               decode_files(spark, enc_dir, SPECS, TOKENS_ARROW_SCHEMA)
+               .select("doc_id").collect()]
+        assert got == want
 
 
 class TestRemoteScheme:

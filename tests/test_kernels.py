@@ -168,6 +168,15 @@ class TestRLESoA:
         with pytest.raises(ValueError):
             rle_soa.decode(blob, 4)
 
+    @pytest.mark.parametrize("vals,count", [
+        ([1, 1, 2], 2),  # over-long stream: more values than asked for
+        ([], 5),         # zero runs while values are asked for
+    ])
+    def test_count_mismatch_raises(self, vals, count):
+        blob = rle_soa.encode(np.array(vals, np.int64))
+        with pytest.raises(ValueError, match="rle_soa stream holds"):
+            rle_soa.decode(blob, count)
+
     def test_int64_extremes(self):
         vals = np.array([np.iinfo(np.int64).min, np.iinfo(np.int64).max,
                          0, 0, 0, np.iinfo(np.int64).min], np.int64)

@@ -265,6 +265,32 @@ def _load_delete_positions(path: str, fs, delete_files, key: str = ""):
     return np.unique(np.concatenate(parts))
 
 
+def _map_units(spark, units: list, n_tasks: int | None, task_fn,
+               schema: pa.Schema):
+    """Run `task_fn(slice)` over `units` cut into n contiguous slices, one
+    Spark task each, n = min(len(units), n_tasks or defaultParallelism) →
+    the DataFrame of the batches `task_fn` yields, typed `schema`.
+
+    Tasks launch from `spark.range(0, n, 1, n)` — one id per partition, no
+    shuffle, one stage — and each task streams the units of its own slice
+    in order, so partition order is unit order. A Python task costs tens of
+    ms before its first line runs, so the default is one task per core:
+    per-task fixed costs amortize over the task's whole slice, and the
+    selector memo is per worker anyway. The slices ride in the closure
+    (PySpark broadcasts a pickled command over 1 MB itself)."""
+    n = max(1, min(len(units),
+                   n_tasks or spark.sparkContext.defaultParallelism))
+    slices = [units[t * len(units) // n:(t + 1) * len(units) // n]
+              for t in range(n)]
+
+    def fn(batches: Iterator[pa.RecordBatch]) -> Iterator[pa.RecordBatch]:
+        for b in batches:
+            for t in b.column(0).to_pylist():
+                yield from task_fn(slices[t])
+
+    return spark.range(0, n, 1, n).mapInArrow(fn, from_arrow_schema(schema))
+
+
 def encode_files(spark, src_path: str | list[str], specs: list[ColumnSpec], *,
                  target_raw_bytes: int = 32 << 20,
                  tasks_per_file: int = 1,
@@ -319,158 +345,128 @@ def encode_files(spark, src_path: str | list[str], specs: list[ColumnSpec], *,
         key = file_keys[i] if file_keys is not None else ""
         for s in range(tasks_per_file):
             units.append((i, p, s, tasks_per_file, seq, key))
-    # several units per task (~3 waves/core): per-task fixed costs — python
-    # worker turnaround and, above all, the selector's measured refinement
-    # (fresh memo per task) — amortize across that task's files. rg_part/
-    # rg_idx derive from the UNIT, so output ordering is task-layout-free.
-    if n_tasks is None:
-        n_tasks = max(1, min(len(units),
-                             spark.sparkContext.defaultParallelism * 3))
-    fdf = spark.createDataFrame(
-        units,
-        "file_idx int, path string, split_idx int, n_splits int, "
-        "seq long, key string"
-    ).repartition(n_tasks)
 
-    def encode_fn(batches: Iterator[pa.RecordBatch]) -> Iterator[pa.RecordBatch]:
+    # rg_part/rg_idx derive from the UNIT, so output ordering is
+    # task-layout-free
+    def encode_fn(task_units) -> Iterator[pa.RecordBatch]:
         import pyarrow.parquet as pq
 
         from .selector import WORKER_MEMO as sel_cache  # per-WORKER memo
         eq_cache: dict = {}  # delete parquet path → deduped current-name table
-        for b in batches:
-            for unit in b.to_pylist():
-                pf = pq.ParquetFile(unit["path"], filesystem=fs)
-                n_rg = pf.metadata.num_row_groups
-                k, m = unit["split_idx"], unit["n_splits"]
-                # contiguous balanced range of parquet row groups per split
-                lo_rg, hi_rg = (k * n_rg) // m, ((k + 1) * n_rg) // m
-                rgs = list(range(lo_rg, hi_rg))
-                if not rgs:
-                    continue
-                dels = (_load_delete_positions(unit["path"], fs,
-                                               delete_files, unit["key"])
-                        if delete_files else None)
-                eq_tables = (_load_eq_tables(fs, equality_deletes,
-                                             unit["seq"], eq_cache)
-                             if equality_deletes else [])
-                eq_cols = list(dict.fromkeys(
-                    c for t in eq_tables for c in t.column_names))
-                wanted = cols + [c for c in eq_cols if c not in cols]
-                read_map = _resolve_read(pf.schema_arrow, wanted,
-                                         column_resolution)
-                # an equality column this file predates reads all-null
-                # here; spec equality matches null TO null, so the table
-                # still applies through delete rows whose key is null in
-                # every missing column — droppable only when some missing
-                # column has no null keys at all (then nothing can match)
-                eq_tables = [t for t in eq_tables
-                             if all(read_map[c] is not None
-                                    or t[c].null_count > 0
-                                    for c in t.column_names)]
-                eq_type = {c: t.schema.field(c).type
-                           for t in eq_tables for c in t.column_names}
-                wanted = cols + [c for c in eq_cols
-                                 if c not in cols and any(
-                                     c in t.column_names for t in eq_tables)]
-                remap = (bool(eq_tables) or wanted != cols
-                         or any(read_map[w] != w for w in cols))
-                read_cols = (cols if not remap else list(dict.fromkeys(
-                    v for w in wanted if (v := read_map[w]) is not None)))
-                if remap and not read_cols:
-                    # every wanted column postdates this file: read one
-                    # physical column purely to carry the row count
-                    read_cols = [pf.schema_arrow.names[0]]
+        for file_idx, path, k, m, seq, key in task_units:
+            pf = pq.ParquetFile(path, filesystem=fs)
+            n_rg = pf.metadata.num_row_groups
+            # contiguous balanced range of parquet row groups per split
+            lo_rg, hi_rg = (k * n_rg) // m, ((k + 1) * n_rg) // m
+            rgs = list(range(lo_rg, hi_rg))
+            if not rgs:
+                continue
+            dels = (_load_delete_positions(path, fs, delete_files, key)
+                    if delete_files else None)
+            eq_tables = (_load_eq_tables(fs, equality_deletes, seq, eq_cache)
+                         if equality_deletes else [])
+            eq_cols = list(dict.fromkeys(
+                c for t in eq_tables for c in t.column_names))
+            wanted = cols + [c for c in eq_cols if c not in cols]
+            read_map = _resolve_read(pf.schema_arrow, wanted,
+                                     column_resolution)
+            # an equality column this file predates reads all-null
+            # here; spec equality matches null TO null, so the table
+            # still applies through delete rows whose key is null in
+            # every missing column — droppable only when some missing
+            # column has no null keys at all (then nothing can match)
+            eq_tables = [t for t in eq_tables
+                         if all(read_map[c] is not None
+                                or t[c].null_count > 0
+                                for c in t.column_names)]
+            eq_type = {c: t.schema.field(c).type
+                       for t in eq_tables for c in t.column_names}
+            wanted = cols + [c for c in eq_cols
+                             if c not in cols and any(
+                                 c in t.column_names for t in eq_tables)]
+            remap = (bool(eq_tables) or wanted != cols
+                     or any(read_map[w] != w for w in cols))
+            read_cols = (cols if not remap else list(dict.fromkeys(
+                v for w in wanted if (v := read_map[w]) is not None)))
+            if remap and not read_cols:
+                # every wanted column postdates this file: read one
+                # physical column purely to carry the row count
+                read_cols = [pf.schema_arrow.names[0]]
 
-                def remap_batch(rb: pa.RecordBatch) -> pa.RecordBatch:
-                    arrays = []
-                    for w in wanted:
-                        fn = read_map[w]
-                        arrays.append(
-                            pa.nulls(rb.num_rows,
-                                     _pa_of_spec(spec_by[w])
-                                     if w in spec_by else eq_type[w])
-                            if fn is None else
-                            rb.column(rb.schema.names.index(fn)))
-                    rb2 = pa.RecordBatch.from_arrays(arrays, names=wanted)
-                    if eq_tables:
-                        keep = _eq_keep_mask(rb2, eq_tables)
-                        if not keep.all():
-                            rb2 = rb2.filter(pa.array(keep))
-                    return rb2.select(cols) if wanted != cols else rb2
-                # rg_idx = absolute starting row offset of the flush in the
-                # file: a total file-position order no matter how parquet
-                # row groups and flush boundaries interleave. With deletes
-                # it stays the PRE-delete offset (offsets remain strictly
-                # increasing, which is all the ordering contract needs).
-                row_off = sum(pf.metadata.row_group(g).num_rows
-                              for g in range(lo_rg))
-                file_pos = row_off  # pre-delete read cursor
-                buf: list[pa.RecordBatch] = []
+            def remap_batch(rb: pa.RecordBatch) -> pa.RecordBatch:
+                arrays = []
+                for w in wanted:
+                    fn = read_map[w]
+                    arrays.append(
+                        pa.nulls(rb.num_rows,
+                                 _pa_of_spec(spec_by[w])
+                                 if w in spec_by else eq_type[w])
+                        if fn is None else
+                        rb.column(rb.schema.names.index(fn)))
+                rb2 = pa.RecordBatch.from_arrays(arrays, names=wanted)
+                if eq_tables:
+                    keep = _eq_keep_mask(rb2, eq_tables)
+                    if not keep.all():
+                        rb2 = rb2.filter(pa.array(keep))
+                return rb2.select(cols) if wanted != cols else rb2
+            # rg_idx = absolute starting row offset of the flush in the
+            # file: a total file-position order no matter how parquet
+            # row groups and flush boundaries interleave. With deletes
+            # it stays the PRE-delete offset (offsets remain strictly
+            # increasing, which is all the ordering contract needs).
+            row_off = sum(pf.metadata.row_group(g).num_rows
+                          for g in range(lo_rg))
+            file_pos = row_off  # pre-delete read cursor
+            buf: list[pa.RecordBatch] = []
+            buf_bytes = 0
+            buf_src_rows = 0
+
+            def flush():
+                nonlocal buf, buf_bytes, buf_src_rows, row_off
+                if not buf:
+                    return None
+                tbl = pa.Table.from_batches(buf)
+                if row_off > 0x7FFFFFFF:
+                    raise ValueError("file exceeds 2^31 rows; rg_idx overflow")
+                start = row_off
+                row_off += buf_src_rows
+                buf = []
                 buf_bytes = 0
                 buf_src_rows = 0
+                if tbl.num_rows == 0:  # every buffered row deleted
+                    return None
+                row = _encode_rowgroup(tbl, specs, sel_cache)
+                row["rg_part"] = file_idx
+                row["rg_idx"] = start
+                return pa.RecordBatch.from_pylist([row], schema=out_schema)
 
-                def flush():
-                    nonlocal buf, buf_bytes, buf_src_rows, row_off
-                    if not buf:
-                        return None
-                    tbl = pa.Table.from_batches(buf)
-                    if row_off > 0x7FFFFFFF:
-                        raise ValueError("file exceeds 2^31 rows; rg_idx overflow")
-                    start = row_off
-                    row_off += buf_src_rows
-                    buf = []
-                    buf_bytes = 0
-                    buf_src_rows = 0
-                    if tbl.num_rows == 0:  # every buffered row deleted
-                        return None
-                    row = _encode_rowgroup(tbl, specs, sel_cache)
-                    row["rg_part"] = unit["file_idx"]
-                    row["rg_idx"] = start
-                    return pa.RecordBatch.from_pylist([row], schema=out_schema)
+            for rb in pf.iter_batches(batch_size=DEFAULT_BATCH_ROWS,
+                                      row_groups=rgs, columns=read_cols):
+                n_src = rb.num_rows
+                if dels is not None and len(dels):
+                    import numpy as np
 
-                for rb in pf.iter_batches(batch_size=DEFAULT_BATCH_ROWS,
-                                          row_groups=rgs, columns=read_cols):
-                    n_src = rb.num_rows
-                    if dels is not None and len(dels):
-                        import numpy as np
+                    lo = np.searchsorted(dels, file_pos)
+                    hi = np.searchsorted(dels, file_pos + n_src)
+                    if hi > lo:
+                        mask = np.ones(n_src, dtype=bool)
+                        mask[dels[lo:hi] - file_pos] = False
+                        rb = rb.filter(pa.array(mask))
+                file_pos += n_src
+                if remap:
+                    rb = remap_batch(rb)
+                buf.append(rb)
+                buf_bytes += rb.nbytes
+                buf_src_rows += n_src
+                if buf_bytes >= target_raw_bytes:
+                    out = flush()
+                    if out is not None:
+                        yield out
+            out = flush()
+            if out is not None:
+                yield out
 
-                        lo = np.searchsorted(dels, file_pos)
-                        hi = np.searchsorted(dels, file_pos + n_src)
-                        if hi > lo:
-                            mask = np.ones(n_src, dtype=bool)
-                            mask[dels[lo:hi] - file_pos] = False
-                            rb = rb.filter(pa.array(mask))
-                    file_pos += n_src
-                    if remap:
-                        rb = remap_batch(rb)
-                    buf.append(rb)
-                    buf_bytes += rb.nbytes
-                    buf_src_rows += n_src
-                    if buf_bytes >= target_raw_bytes:
-                        out = flush()
-                        if out is not None:
-                            yield out
-                out = flush()
-                if out is not None:
-                    yield out
-
-    return fdf.mapInArrow(encode_fn, from_arrow_schema(out_schema))
-
-
-def _files_df(spark, enc_path: str | list[str], n_tasks: int | None = None,
-              filesystem=None):
-    """File list → one partition per task, several files per partition.
-    Blob files are often small (one tokenc row group each); one task per
-    file would drown useful work in task overhead, so default to ~3 waves
-    per core and let each task stream its file subset."""
-    fs, files = _list_fs(enc_path, filesystem)
-    if not files:
-        raise ValueError(f"no parquet files under {enc_path}")
-    if n_tasks is None:
-        n_tasks = max(1, min(len(files),
-                             spark.sparkContext.defaultParallelism * 3))
-    return fs, spark.createDataFrame([(p,) for p in files], "path string") \
-        .repartition(n_tasks)
+    return _map_units(spark, units, n_tasks, encode_fn, out_schema)
 
 
 def decode_files(spark, enc_path: str | list[str], specs: list[ColumnSpec],
@@ -480,9 +476,14 @@ def decode_files(spark, enc_path: str | list[str], specs: list[ColumnSpec],
     with pyarrow — the read mirror of `encode_files`. The JVM never scans
     or ships the blob bytes; only the DECODED rows cross the Python→JVM
     boundary (unavoidable when the result must be a DataFrame of rows).
+    Rows come out in file order, one RecordBatch per row group (worker
+    memory stays at one decoded row group); `batch_groups` blob rows are
+    read from the parquet at a time.
     """
     blob_cols = [f"{s.name}_blob" for s in specs]
-    fs, fdf = _files_df(spark, enc_path, n_tasks, filesystem)
+    fs, files = _list_fs(enc_path, filesystem)
+    if not files:
+        raise ValueError(f"no parquet files under {enc_path}")
     # Spark has no FixedSizeBinary type: FLBA columns surface as plain
     # binary at the DataFrame boundary (exactly Spark's own FLBA-parquet
     # behavior); Arrow-native consumers use tokenc.local for the exact type
@@ -491,28 +492,25 @@ def decode_files(spark, enc_path: str | list[str], specs: list[ColumnSpec],
         if pa.types.is_fixed_size_binary(f.type) else f
         for f in out_schema])
 
-    def fn(batches: Iterator[pa.RecordBatch]) -> Iterator[pa.RecordBatch]:
+    def fn(paths) -> Iterator[pa.RecordBatch]:
         import pyarrow.parquet as pq
 
-        for b in batches:
-            for unit in b.to_pylist():
-                pf = pq.ParquetFile(unit["path"], filesystem=fs)
-                for rb in pf.iter_batches(batch_size=batch_groups,
-                                          columns=blob_cols):
-                    tbl = pa.Table.from_batches([rb])
-                    views = [_blob_views(tbl, c) for c in blob_cols]
+        for path in paths:
+            pf = pq.ParquetFile(path, filesystem=fs)
+            for rb in pf.iter_batches(batch_size=batch_groups,
+                                      columns=blob_cols):
+                tbl = pa.Table.from_batches([rb])
+                views = [_blob_views(tbl, c) for c in blob_cols]
+                for g in range(rb.num_rows):
                     cols = []
                     for j, spec in enumerate(specs):
-                        arrs = [_rebuild(decode_chunk(v), spec)
-                                for v in views[j]]
-                        arr = (arrs[0] if len(arrs) == 1
-                               else pa.concat_arrays(arrs))
+                        arr = _rebuild(decode_chunk(views[j][g]), spec)
                         if pa.types.is_fixed_size_binary(arr.type):
                             arr = arr.cast(pa.binary())
                         cols.append(arr)
                     yield pa.RecordBatch.from_arrays(cols, schema=out_schema)
 
-    return fdf.mapInArrow(fn, from_arrow_schema(out_schema))
+    return _map_units(spark, files, n_tasks, fn, out_schema)
 
 
 def decode_invariants_files(spark, enc_path: str | list[str],
@@ -526,21 +524,22 @@ def decode_invariants_files(spark, enc_path: str | list[str],
     Arrow buffer → numpy view → decode kernels) with zero JVM involvement
     beyond task scheduling."""
     blob_cols = [f"{s.name}_blob" for s in specs]
-    fs, fdf = _files_df(spark, enc_path, n_tasks, filesystem)
+    fs, files = _list_fs(enc_path, filesystem)
+    if not files:
+        raise ValueError(f"no parquet files under {enc_path}")
 
-    def fn(batches: Iterator[pa.RecordBatch]) -> Iterator[pa.RecordBatch]:
+    def fn(paths) -> Iterator[pa.RecordBatch]:
         import pyarrow.parquet as pq
 
-        for b in batches:
-            for unit in b.to_pylist():
-                pf = pq.ParquetFile(unit["path"], filesystem=fs)
-                rows = []
-                for rb in pf.iter_batches(batch_size=batch_groups,
-                                          columns=blob_cols):
-                    tbl = pa.Table.from_batches([rb])
-                    views = [_blob_views(tbl, c) for c in blob_cols]
-                    rows.extend(_invariant_rows(views, specs))
-                if rows:
-                    yield pa.RecordBatch.from_pylist(rows, schema=INVARIANT_SCHEMA)
+        for path in paths:
+            pf = pq.ParquetFile(path, filesystem=fs)
+            rows = []
+            for rb in pf.iter_batches(batch_size=batch_groups,
+                                      columns=blob_cols):
+                tbl = pa.Table.from_batches([rb])
+                views = [_blob_views(tbl, c) for c in blob_cols]
+                rows.extend(_invariant_rows(views, specs))
+            if rows:
+                yield pa.RecordBatch.from_pylist(rows, schema=INVARIANT_SCHEMA)
 
-    return fdf.mapInArrow(fn, from_arrow_schema(INVARIANT_SCHEMA))
+    return _map_units(spark, files, n_tasks, fn, INVARIANT_SCHEMA)

@@ -98,7 +98,7 @@ def read_avro(spark: SparkSession, path, *, filesystem=None) -> DataFrame:
     import pyarrow as pa
 
     from .avro import read_ocf
-    from .engine import from_arrow_schema
+    from .files import _map_units
 
     fs, files = _list_fs_avro(path, filesystem)
     if not files:
@@ -109,22 +109,17 @@ def read_avro(spark: SparkSession, path, *, filesystem=None) -> DataFrame:
                               for f in schema_json["fields"]])
     names = [f.name for f in arrow_schema]
 
-    fdf = spark.createDataFrame([(p,) for p in files], "path string") \
-        .repartition(min(len(files),
-                         spark.sparkContext.defaultParallelism * 2))
+    def fn(paths):
+        for p in paths:
+            with fs.open_input_file(p) as fobj:
+                _, records = read_ocf(fobj.read())
+            if records:
+                tbl = pa.Table.from_pylist(
+                    [{k: r.get(k) for k in names} for r in records],
+                    schema=arrow_schema)
+                yield from tbl.to_batches(max_chunksize=8192)
 
-    def fn(batches):
-        for b in batches:
-            for unit in b.to_pylist():
-                with fs.open_input_file(unit["path"]) as fobj:
-                    _, records = read_ocf(fobj.read())
-                if records:
-                    tbl = pa.Table.from_pylist(
-                        [{k: r.get(k) for k in names} for r in records],
-                        schema=arrow_schema)
-                    yield from tbl.to_batches(max_chunksize=8192)
-
-    return fdf.mapInArrow(fn, from_arrow_schema(arrow_schema))
+    return _map_units(spark, files, None, fn, arrow_schema)
 
 
 def _list_fs_avro(path, filesystem):
