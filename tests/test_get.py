@@ -6,6 +6,9 @@ when the manifest's sorted flags say the layout is clustered."""
 
 from __future__ import annotations
 
+import time
+import uuid
+
 import numpy as np
 import pandas as pd
 import pytest
@@ -31,6 +34,93 @@ def kv_enc(spark):
     enc = encode_df(df, specs, target_raw_bytes=32 << 10).cache()
     enc.count()
     return enc, specs, schema
+
+
+@pytest.fixture(scope="module")
+def doc_enc(spark):
+    """The benchmark's lookup shape, persisted: range-clustered
+    `doc_%012d` keys — all sharing their first 8 bytes, so the byte-array
+    page bounds tell no two apart — beside a wide list column split into
+    pages."""
+    from pyspark.sql import functions as F
+    from pyspark.sql.pandas.types import to_arrow_schema
+
+    from tokenc.engine import encode_df
+    from tokenc.schema import specs_from_arrow_schema
+
+    df = (spark.range(6000).select(
+        F.format_string("doc_%012d", F.col("id")).alias("doc_id"),
+        F.sequence(F.lit(0), F.col("id") % 40 + 20).cast("array<int>")
+        .alias("tokens"),
+        (F.col("id") % 40 + 21).cast("int").alias("n_tok"))
+        .repartitionByRange(4, "doc_id").sortWithinPartitions("doc_id"))
+    schema = to_arrow_schema(df.schema)
+    specs = specs_from_arrow_schema(schema, bloom_columns=["doc_id"])
+    enc = encode_df(df, specs, target_raw_bytes=64 << 10,
+                    page_bytes=8 << 10).cache()
+    enc.count()
+    return enc, specs, schema
+
+
+def _spark_jobs(spark, fn):
+    """fn() and the number of Spark jobs it ran, counted with the public
+    status tracker under a job group of its own. A marker job in a second
+    group runs after it: listener events arrive in order, so once the
+    marker shows, every job of the first group does."""
+    sc = spark.sparkContext
+    group, marker = (f"lookup-{uuid.uuid4().hex}" for _ in range(2))
+    try:
+        sc.setJobGroup(group, "lookup")
+        out = fn()
+        sc.setJobGroup(marker, "marker")
+        sc.parallelize([0], 1).count()
+    finally:
+        sc.setLocalProperty("spark.jobGroup.id", None)
+    st = sc.statusTracker()
+    deadline = time.monotonic() + 30
+    while not st.getJobIdsForGroup(marker):
+        assert time.monotonic() < deadline, "marker job never showed"
+        time.sleep(0.05)
+    return out, len(st.getJobIdsForGroup(group))
+
+
+def _list_rows_decoded(monkeypatch):
+    """Rows of LIST chunks decoded in this process through
+    engine.decode_chunk_rows_multi, appended to the returned list."""
+    import tokenc.engine as eng
+    from tokenc.chunk import F_IS_LIST
+
+    rows, real = [], eng.decode_chunk_rows_multi
+
+    def counting(blob, runs):
+        cds, decoded = real(blob, runs)
+        if blob[7] & F_IS_LIST:
+            rows.append(sum(cd.n_rows for cd in cds))
+        return cds, decoded
+
+    monkeypatch.setattr(eng, "decode_chunk_rows_multi", counting)
+    return rows
+
+
+def _doc_lookups(doc_enc):
+    """-> (get, scan) closures on doc_enc returning sorted collected rows:
+    a 4-key get and a 100-key range scan."""
+    import tokenc.engine as eng
+
+    enc, specs, schema = doc_enc
+    keys = [f"doc_{i:012d}" for i in (5, 777, 2048, 5999)]
+    lo, hi = "doc_000000001000", "doc_000000001099"
+
+    def get(**kw):
+        return sorted(eng.get(enc, specs, schema, "doc_id", keys,
+                              **kw).collect())
+
+    def scan(**kw):
+        return sorted(eng.scan(enc, specs, schema,
+                               [("doc_id", "between", (lo, hi))],
+                               **kw).collect())
+
+    return get, scan
 
 
 def _want(keys):
@@ -125,6 +215,128 @@ class TestGet:
         with pytest.raises(KeyError):
             get(enc, specs, schema, "nope", [1])
 
+    def test_decimal_key_fetch(self, spark):
+        """Regression: decimal stats, sorted index, bloom and page bounds
+        hold UNSCALED integers; a probe of 30 or 30.5 read as unscaled 30
+        — a row group far from the one holding 30.00 / 30.50 (unscaled
+        3000 / 3050) — and fetched nothing."""
+        from decimal import Decimal
+
+        from pyspark.sql import functions as F
+        from pyspark.sql.pandas.types import to_arrow_schema
+
+        from tokenc.engine import encode_df, get
+        from tokenc.schema import specs_from_arrow_schema
+
+        df = (spark.range(20_000).select(
+            F.col("id").alias("k"),
+            (F.col("id") / 100).cast("decimal(10,2)").alias("price"))
+            .repartitionByRange(4, "k").sortWithinPartitions("k"))
+        schema = to_arrow_schema(df.schema)
+        specs = specs_from_arrow_schema(schema, bloom_columns=["price"])
+        enc = encode_df(df, specs, target_raw_bytes=16 << 10).cache()
+        enc.count()
+        for auto in (True, False):
+            for probe, k in ((30, 3000), (30.5, 3050),
+                             (Decimal("30.50"), 3050)):
+                got = get(enc, specs, schema, "price", [probe],
+                          auto_index=auto).toPandas()
+                assert got["k"].tolist() == [k], (probe, auto)
+        enc.unpersist()
+
+
+class TestLookupLaunch:
+    """A selective lookup on a persisted frame with a memoized index runs
+    ONE JVM-only Spark job and decodes in the calling process, where the
+    wide columns decode only the rows whose key matches."""
+
+    def test_one_job_and_matching_rows_only(self, spark, doc_enc,
+                                            monkeypatch):
+        from tokenc.chunk import F_PAGED
+
+        enc = doc_enc[0]
+        assert enc.first()["tokens_blob"][7] & F_PAGED  # wide column paged
+        get, scan = _doc_lookups(doc_enc)
+        get(), scan()  # warm: builds and memoizes the index
+        rows = _list_rows_decoded(monkeypatch)
+        got, jobs = _spark_jobs(spark, get)
+        assert jobs == 1
+        assert sum(rows) == 4, rows
+        rows.clear()
+        scanned, jobs = _spark_jobs(spark, scan)
+        assert jobs == 1
+        assert sum(rows) == 100, rows
+        monkeypatch.undo()
+        assert len(got) == 4 and len(scanned) == 100
+        assert got == get(auto_index=False)
+        assert scanned == scan(auto_index=False)
+
+    def test_byte_cap_keeps_distributed_path(self, spark, doc_enc,
+                                             monkeypatch):
+        import tokenc.engine as eng
+
+        get, scan = _doc_lookups(doc_enc)
+        want = get(auto_index=False), scan(auto_index=False)
+        get(), scan()  # warm
+        monkeypatch.setattr(eng, "_LOCAL_LOOKUP_BYTES", 0)
+        rows = _list_rows_decoded(monkeypatch)
+        got, jobs = _spark_jobs(spark, lambda: (get(), scan()))
+        assert rows == [], "decoded in the calling process"
+        assert jobs >= 4  # per lookup: fingerprint + distributed decode
+        assert got == want
+
+    def test_fingerprint_checked_when_filter_folds_away(self, spark,
+                                                        doc_enc):
+        """A candidate filter the optimizer proves empty drops the fetch's
+        observation with it; the fingerprint must still be checked."""
+        from pyspark.sql import functions as F
+
+        import tokenc.engine as eng
+
+        enc = doc_enc[0]
+        token = eng._index_mat_token(enc, "doc_id")[0]
+
+        def folded(df):
+            return df.where(F.lit(False))
+
+        for ids in (["x"], []):
+            assert eng._fetch_checked(enc, folded, ["rg_id"], [token],
+                                      ids) == []
+            assert eng._fetch_checked(enc, folded, ["rg_id"], [(-1, 0)],
+                                      ids) is None
+
+    def test_naive_timestamps_match_distributed_path(self, spark):
+        """The in-process decode hands Spark the same instants as the
+        mapInArrow path, which reads a naive Arrow timestamp as UTC: no
+        re-localization to a non-UTC session time zone."""
+        import pyarrow as pa
+        from pyspark.sql import functions as F
+
+        from tokenc.engine import encode_df, get
+        from tokenc.schema import specs_from_arrow_schema
+
+        schema = pa.schema([pa.field("k", pa.int64()),
+                            pa.field("ts", pa.timestamp("us")),
+                            pa.field("tl", pa.list_(pa.timestamp("us")))])
+        df = (spark.range(3001).select(
+            F.col("id").alias("k"),
+            F.timestamp_seconds(F.col("id") * 3600).alias("ts"),
+            F.array(F.timestamp_seconds(F.col("id"))).alias("tl"))
+            .repartitionByRange(2, "k").sortWithinPartitions("k"))
+        specs = specs_from_arrow_schema(schema)
+        enc = encode_df(df, specs, target_raw_bytes=8 << 10).cache()
+        enc.count()
+        tz = spark.conf.get("spark.sql.session.timeZone")
+        spark.conf.set("spark.sql.session.timeZone", "America/Los_Angeles")
+        try:
+            got = [sorted(get(enc, specs, schema, "k", [5, 2500],
+                              auto_index=auto).collect())
+                   for auto in (True, False)]
+        finally:
+            spark.conf.set("spark.sql.session.timeZone", tz)
+            enc.unpersist()
+        assert len(got[0]) == 2 and got[0] == got[1]
+
 
 class TestAutoIndex:
     def test_index_memoized_across_scans(self, spark, monkeypatch):
@@ -217,8 +429,11 @@ class TestAutoIndex:
         """Regression (r5 review): the memo is keyed on the DataFrame
         HANDLE, but an unpersist + re-cache re-materializes the lineage
         with different content-hash rg_ids — a stale index's IN-list
-        would silently match zero row groups. Every reuse re-checks a
-        1-row materialization fingerprint; a mismatch must rebuild."""
+        would silently match zero row groups. Every reuse checks the
+        materialization fingerprint (its own 1-row job, or read by the
+        lookup's fetch job); a mismatch must rebuild."""
+        import copy
+
         from pyspark.sql import functions as F
         from pyspark.sql.pandas.types import to_arrow_schema
 
@@ -253,6 +468,20 @@ class TestAutoIndex:
         assert eng.scan(enc, specs, schema,
                         [("k", "between", (100, 200))]).count() == 101
         assert calls.count("k") == 2, calls
+        # the same through get(), present and absent keys, with the memo's
+        # index ALSO stale (rg_ids of another materialization): a lookup
+        # must rebuild, never return a silent empty result
+        for keys in ([150, 21_999], [-5]):
+            tok, state, idx = eng._sorted_indexes[enc]["k"]
+            stale = copy.copy(idx)
+            stale.rg_ids = [f"old{r}" for r in idx.rg_ids]
+            stale.rg_bytes = {f"old{r}": b for r, b in idx.rg_bytes.items()}
+            eng._sorted_indexes[enc]["k"] = ((-1, "gone", "gone"), state,
+                                             stale)
+            n = calls.count("k")
+            got = eng.get(enc, specs, schema, "k", keys).orderBy("k")
+            assert got.toPandas()["k"].tolist() == [k for k in keys if k > 0]
+            assert calls.count("k") == n + 1, calls
 
     def test_unpersist_recache_scan_stays_exact(self, spark):
         """End-to-end guarantee behind the fingerprint: whatever rg_ids
@@ -318,3 +547,52 @@ class TestAutoIndex:
         got = eng.get(enc, specs, schema, "k", [42]).toPandas()
         assert got["k"].tolist() == [42]
         assert calls == ["k"], "point fetch builds the index after a skip"
+
+
+class TestNarrowRuns:
+    """engine._narrow_runs keeps exactly the rows whose key can match, in
+    the domain Spark's residual compares in."""
+
+    @staticmethod
+    def _rows(reps):
+        import pyarrow as pa
+
+        import tokenc.engine as eng
+        from tokenc.schema import specs_from_arrow_schema
+
+        tbl = pa.table({
+            "f": pa.array([1.5, -0.0, None, float("nan"), 0.0, 7.0] * reps),
+            "i": pa.array([3, None, 5, -7, 3, 9] * reps, pa.int64()),
+            "s": pa.array(["doc_a", None, "doc_b", "doc_c", "doc_a", "x"]
+                          * reps)})
+        specs = specs_from_arrow_schema(tbl.schema)
+        row = eng._encode_rowgroup(tbl, specs)
+
+        def rows(col, **kw):
+            spec = next(s for s in specs if s.name == col)
+            runs = eng._narrow_runs(row[f"{col}_blob"], spec,
+                                    [(0, 1 << 31)], **kw)
+            return [r for a, b in runs
+                    for r in range(a, min(b, tbl.num_rows))], runs
+
+        return rows
+
+    def test_residual_domains(self):
+        rows = self._rows(2)
+        # -0.0 equals 0.0; NaN rows are kept (Spark orders NaN highest)
+        assert rows("f", values=[0.0])[0] == [1, 3, 4, 7, 9, 10]
+        assert rows("f", lo=1.0)[0] == [0, 3, 5, 6, 9, 11]
+        assert rows("i", values=[3])[0] == [0, 4, 6, 10]
+        assert rows("i", lo=-7, hi=4)[0] == [0, 3, 4, 6, 9, 10]  # no nulls
+        assert rows("s", values=["doc_a", b"x"])[0] == [0, 4, 5, 6, 10, 11]
+        assert rows("s", lo="doc_b", hi="doc_c")[0] == [2, 3, 8, 9]
+        assert rows("s", values=["nope"])[0] == []
+        # a float probe on an int key compares in float64: runs unchanged
+        assert rows("i", values=[3.0])[1] == [(0, 1 << 31)]
+
+    def test_scattered_matches_merge_to_a_superset(self):
+        from tokenc.engine import _NARROW_MAX_RUNS
+
+        got, runs = self._rows(300)("i", values=[3])
+        assert len(runs) == _NARROW_MAX_RUNS
+        assert set(got) >= {r for r in range(1800) if r % 6 in (0, 4)}

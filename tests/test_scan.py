@@ -179,6 +179,40 @@ class TestScanEdges:
               .orderBy("k").toPandas())
         assert len(eq) == 1
 
+    def test_decimal_bounds_stay_exact(self, spark):
+        # regression: a decimal column's manifest min/max, sorted index,
+        # bloom, distinct set and page bounds hold UNSCALED integers, and
+        # comparing them with the caller's literal pruned live rows — 30.5
+        # reads as unscaled 30, a row group far from the one holding
+        # 30.50 (unscaled 3050). Every pruning tier must skip decimals.
+        from decimal import Decimal
+
+        from pyspark.sql import functions as F
+        from pyspark.sql.pandas.types import to_arrow_schema
+
+        from tokenc.engine import encode_df, scan
+        from tokenc.schema import specs_from_arrow_schema
+
+        df = (spark.range(20_000).select(
+            F.col("id").alias("k"),
+            (F.col("id") / 100).cast("decimal(10,2)").alias("price"))
+            .repartitionByRange(4, "k").sortWithinPartitions("k"))
+        schema = to_arrow_schema(df.schema)
+        specs = specs_from_arrow_schema(schema, bloom_columns=["price"],
+                                        distinct_columns=["price"])
+        enc = encode_df(df, specs, target_raw_bytes=16 << 10).cache()
+        enc.count()
+        for auto in (True, False):
+            def n(filters):
+                return scan(enc, specs, schema, filters,
+                            auto_index=auto).count()
+
+            assert n([("price", "<=", 30.5)]) == 3051, auto
+            assert n([("price", "between", (10, 20))]) == 1001, auto
+            assert n([("price", "=", 30.5)]) == 1, auto
+            assert n([("price", "in", [Decimal("30.50"), 7])]) == 2, auto
+        enc.unpersist()
+
     def test_random_conjunctions_property(self, spark, scan_enc):
         import random
 

@@ -31,7 +31,9 @@ import numpy as np
 import pyarrow as pa
 
 from . import arrow_util, codecs, selector
-from .chunk import ChunkStats, decode_chunk, decode_chunk_rows, encode_chunk
+from .chunk import (ChunkStats, decode_chunk, decode_chunk_rows,
+                    decode_chunk_rows_multi, encode_chunk,
+                    page_filter_row_runs, page_filter_row_runs_multi)
 from .codecs.plain import _ranges_to_indices
 from .schema import ColumnSpec
 
@@ -1113,47 +1115,45 @@ def _is_persisted(df) -> bool:
         return False
 
 
+def _fingerprint_cols():
+    """A manifest's materialization fingerprint as aggregate columns:
+    row-group count + order-independent xor of the content-hash rg_ids —
+    ANY membership change flips it, including one in the middle of the
+    hash range that count and min/max extremes would miss."""
+    from pyspark.sql import functions as F
+
+    # bit_xor never overflows (ANSI-safe, unlike sum of int64)
+    return (F.count("*").alias("n"),
+            F.expr("bit_xor(xxhash64(rg_id))").alias("hxor"))
+
+
 def _index_mat_token(enc_df, column: str):
-    """ONE single-row aggregate over the persisted manifest: a
-    materialization fingerprint (row-group count + order-independent
-    xor of the content-hash rg_ids — ANY membership change flips it,
-    including one in the middle of the hash range that count and
-    min/max extremes would miss) and whether every chunk of `column` is
-    internally sorted. The fingerprint guards the memoized index against
-    a handle that was unpersisted and re-cached, or that lost cached
-    blocks and recomputed some partitions: the recompute re-samples
-    repartitionByRange boundaries, so the new materialization has
-    different rg_ids and a stale index's IN-list would silently drop
-    their rows. The all-sorted bit lets clustered-only
+    """ONE single-row aggregate over the persisted manifest: the
+    materialization fingerprint (_fingerprint_cols) and whether every
+    chunk of `column` is internally sorted. The fingerprint guards the
+    memoized index against a handle that was unpersisted and re-cached,
+    or that lost cached blocks and recomputed some partitions: the
+    recompute re-samples repartitionByRange boundaries, so the new
+    materialization has different rg_ids and a stale index's IN-list
+    would silently drop their rows. The all-sorted bit lets clustered-only
     callers skip the O(n) manifest collect when the layout can't qualify."""
     from pyspark.sql import functions as F
 
     r = enc_df.agg(
-        F.count("*").alias("n"),
-        # bit_xor never overflows (ANSI-safe, unlike sum of int64)
-        F.expr("bit_xor(xxhash64(rg_id))").alias("hxor"),
+        *_fingerprint_cols(),
         F.min(F.coalesce(F.col(f"{column}_meta.sorted"),
                          F.lit(False))).alias("allsrt")).collect()[0]
     return (r["n"], r["hxor"]), bool(r["allsrt"])
 
 
-def sorted_index_for(enc_df, column: str, require_clustered: bool = False):
-    """Build-and-memoize a SortedKeyIndex per (DataFrame handle, column).
-    The build is ONE metadata collect of (rg_id, min, max, sorted) —
-    tens of MB at 10^6 row groups — paid on the FIRST lookup against this
-    handle and reused by every later scan()/get() on it (the cache is
-    weak-keyed on the DataFrame object, so it dies with the handle).
-    Every call re-checks a 1-row materialization fingerprint
-    (_index_mat_token) so a re-persisted handle rebuilds instead of
-    filtering on stale rg_ids. That per-call check IS a (tiny,
-    manifest-metadata-only) Spark job — a deliberate trade: block
-    eviction and recompute are invisible to the driver, so any
-    check-less scheme risks silently dropping recomputed row groups,
-    and the job costs the same class as the query planning it guards. With `require_clustered` (scan()'s range
-    path, which discards non-clustered indexes) an unsorted layout skips
-    the full-manifest collect entirely. Returns None when the column's
-    stats can't index (mixed-type or missing stats, list columns):
-    callers fall back to the distributed stats-scan prunes."""
+def _memo_index(enc_df, column: str, require_clustered: bool = False,
+                verify: bool = True):
+    """The memo behind sorted_index_for → (token, index, checked): the
+    fingerprint the entry was built at, the index (None when the column
+    can't index, or a clustered-only caller skipped an unsorted layout),
+    and whether this call re-checked the fingerprint. With verify=False a
+    memo hit costs no Spark job; the caller must then check the token
+    itself (_lookup's fetch reads the fingerprint in its own job)."""
     global _sorted_indexes
     import weakref
 
@@ -1162,37 +1162,211 @@ def sorted_index_for(enc_df, column: str, require_clustered: bool = False):
     if _sorted_indexes is None:
         _sorted_indexes = weakref.WeakKeyDictionary()
     cache = _sorted_indexes.setdefault(enc_df, {})
+    hit = cache.get(column)
+    if not verify and hit is not None and (hit[1] == "built"
+                                           or require_clustered):
+        return hit[0], hit[2], False
     try:
         token, all_sorted = _index_mat_token(enc_df, column)
     except Exception:
         # no meta struct for this column (AnalysisException) — index
         # unavailable, not fatal: the stats-scan prune path handles it
-        return None
-    hit = cache.get(column)
+        return None, None, True
     if hit is not None and hit[0] == token:
-        state, idx = hit[1], hit[2]
-        if state == "built" or require_clustered:
-            return idx
+        if hit[1] == "built" or require_clustered:
+            return token, hit[2], True
         # 'skipped' entry from an earlier clustered-only call; a point-
         # lookup caller wants the overlap-tolerant index — build it now
     if require_clustered and not all_sorted:
         # unsorted chunks force clustered=False, which the caller would
         # discard — record the skip without the O(n) collect + sort
         cache[column] = (token, "skipped", None)
-        return None
+        return token, None, True
     try:
         idx = SortedKeyIndex.build(enc_df, column)
     except Exception:
         # mixed-type stats (TypeError) — the stats-scan prunes handle it
         idx = None
     cache[column] = (token, "built", idx)
-    return idx
+    return token, idx, True
+
+
+def sorted_index_for(enc_df, column: str, require_clustered: bool = False):
+    """Build-and-memoize a SortedKeyIndex per (DataFrame handle, column).
+    The build is ONE metadata collect of (rg_id, min, max, sorted, bytes)
+    — tens of MB at 10^6 row groups — paid on the FIRST lookup against
+    this handle and reused by every later scan()/get() on it (the cache
+    is weak-keyed on the DataFrame object, so it dies with the handle).
+    This entry point re-checks a 1-row materialization fingerprint
+    (_index_mat_token, one manifest-metadata-only Spark job) on every
+    call, so a re-persisted handle rebuilds instead of filtering on stale
+    rg_ids: block eviction and recompute are invisible to the driver.
+    get()/scan() skip that job when their candidates are small enough to
+    fetch in the calling process — the fetch reads the same fingerprint
+    in its own job and rebuilds on a mismatch (_lookup). With
+    `require_clustered` (scan()'s range path, which discards
+    non-clustered indexes) an unsorted layout skips the full-manifest
+    collect entirely. Returns None when the column's stats can't index
+    (mixed-type or missing stats, list columns): callers fall back to the
+    distributed stats-scan prunes."""
+    return _memo_index(enc_df, column, require_clustered)[1]
 
 
 # a probed rg_id set bigger than this would put an unwieldy literal
 # IN-list into the plan; past it the distributed stats-scan prune is the
 # better shape anyway (the index only wins when the probe is selective)
 _INDEX_ISIN_CAP = 4096
+# a memo-indexed get/scan whose candidate row groups hold at most this
+# many encoded bytes (all columns) decodes in the calling process after
+# ONE JVM-only fetch job; bigger candidate sets decode distributed
+_LOCAL_LOOKUP_BYTES = 64 << 20
+# late materialization re-decodes a column's pages once per row run, so
+# the narrowed runs merge across their smallest gaps down to this many
+_NARROW_MAX_RUNS = 16
+
+
+def _narrow_runs(blob, spec: ColumnSpec, runs, values=None, lo=None,
+                 hi=None):
+    """Late materialization for get()/scan(): narrow the page-level row
+    `runs` of a key chunk to the rows whose key can satisfy `key IN
+    values` or `lo <= key <= hi`, so every other column decodes (and
+    crosses to the JVM) only those rows. Decodes the key chunk's pages
+    under `runs` (the whole chunk if unpaged) and compares in the exact
+    residual's domain: bytes lexicographically for string/binary keys,
+    exact int64 for integer keys with int probes, float64 for float keys
+    (an int probe rounds through float32 on a float32 key, as Spark's
+    coercion does; NaN keys are kept — Spark orders NaN above every
+    value). Null keys never match. Any other key or probe type returns
+    `runs` unchanged. The result is a superset of the matching rows (the
+    residual filter stays exact): closest runs merge until at most
+    _NARROW_MAX_RUNS remain."""
+    import pyarrow.compute as pc
+
+    probes = (list(values) if values is not None
+              else [v for v in (lo, hi) if v is not None])
+    if not runs or not probes or spec.is_list:
+        return runs
+    cds, _ = decode_chunk_rows_multi(blob, runs)
+    parts = [_rebuild(cd, spec) for cd in cds]
+    key = parts[0] if len(parts) == 1 else pa.concat_arrays(parts)
+    t = key.type
+
+    def is_int(v):
+        return type(v) is int and -2 ** 63 <= v < 2 ** 63
+
+    if (pa.types.is_string(t) or pa.types.is_large_string(t)
+            or pa.types.is_binary(t) or pa.types.is_large_binary(t)) \
+            and all(isinstance(v, (str, bytes)) for v in probes):
+        dom = pa.large_binary()
+
+        def conv(v):
+            return v.encode() if isinstance(v, str) else v
+    elif pa.types.is_integer(t) and all(is_int(v) for v in probes):
+        dom, conv = pa.int64(), int
+    elif pa.types.is_floating(t) and all(
+            is_int(v) or (type(v) is float and v == v) for v in probes):
+        dom = pa.float64()
+
+        def conv(v):
+            # + 0.0 folds -0.0 into 0.0, which Spark's equality equates
+            return (float(np.float32(v)) if is_int(v) and t == pa.float32()
+                    else float(v)) + 0.0
+    else:
+        return runs
+    key = key.cast(dom)
+    if pa.types.is_floating(dom):
+        key = pc.add(key, 0.0)
+    if values is not None:
+        mask = pc.is_in(key, value_set=pa.array([conv(v) for v in values],
+                                                 dom))
+    else:
+        mask = pa.array(np.ones(len(key), bool))
+        if lo is not None:
+            mask = pc.and_(mask, pc.greater_equal(key, pa.scalar(conv(lo), dom)))
+        if hi is not None:
+            mask = pc.and_(mask, pc.less_equal(key, pa.scalar(conv(hi), dom)))
+    if pa.types.is_floating(dom):
+        mask = pc.or_(mask, pc.is_nan(key))
+    hit = np.concatenate([np.arange(r0, r0 + cd.n_rows) for (r0, _), cd
+                          in zip(runs, cds)])[
+        np.asarray(mask.fill_null(False), bool)]
+    if not hit.size:
+        return []
+    gaps = np.diff(hit)
+    brk = np.flatnonzero(gaps > 1)
+    if brk.size >= _NARROW_MAX_RUNS:
+        keep = np.argsort(gaps[brk], kind="stable")[1 - _NARROW_MAX_RUNS:]
+        brk = np.sort(brk[keep])
+    starts = np.concatenate(([hit[0]], hit[brk + 1]))
+    ends = np.concatenate((hit[brk] + 1, [hit[-1] + 1]))
+    return list(zip(starts.tolist(), ends.tolist()))
+
+
+def _fetch_checked(enc_df, prune, cols, tokens, ids):
+    """The calling-process half of _lookup: ONE job fetches `cols` of the
+    candidate row groups AND, from the same scan of the unfiltered
+    manifest, its materialization fingerprint → the fetched
+    RecordBatches, or None when the fingerprint differs from a memo
+    token (the index was built on another materialization). The job is
+    JVM-only unless `prune` carries a scan's bloom UDF ('=' conjuncts)."""
+    from py4j.protocol import Py4JJavaError
+    from pyspark.sql import Observation
+
+    seen, batches = None, []
+    if ids:
+        obs = Observation()
+        batches = prune(enc_df.observe(obs, *_fingerprint_cols())) \
+            .select(*cols).toArrow().to_batches()
+        try:
+            seen = obs.get
+        except Py4JJavaError:
+            # the optimizer proved the filter empty (e.g. disjoint IN-lists)
+            # and dropped the observation with it
+            pass
+    if seen is None:
+        # `rg_id IN ()` folds the same way: the fingerprint is its own job
+        seen = enc_df.agg(*_fingerprint_cols()).collect()[0]
+    fp = (seen["n"], seen["hxor"])
+    return batches if all(t == fp for t in tokens) else None
+
+
+def _lookup(enc_df, out_schema: pa.Schema, cols, fn, residual, plan):
+    """Run a planned get()/scan(). `plan(verify)` → (prune, memo): `prune`
+    maps a manifest DataFrame to its candidate row groups (tier 1), and
+    `memo` is None unless memoized indexes chose them, else (their
+    fingerprint tokens, the candidate rg_ids or None when unavailable for
+    a local fetch, the candidates' encoded bytes, whether the tokens were
+    re-checked). Candidates under _LOCAL_LOOKUP_BYTES are fetched by
+    _fetch_checked and decoded HERE by `fn`, the same per-batch function
+    the distributed path maps over the executors — no Python worker, no
+    separate fingerprint job; a stale memo is dropped and rebuilt, once.
+    Everything else decodes distributed (`mapInArrow`) after re-checking
+    any memoized index, then the exact `residual` filter applies."""
+    from pyspark.sql.pandas.types import to_arrow_schema
+
+    schema = from_arrow_schema(out_schema)
+    for _ in range(2):
+        prune, memo = plan(False)
+        if memo is None:
+            break
+        tokens, ids, nbytes, checked = memo
+        if ids is None or nbytes is None or nbytes > _LOCAL_LOOKUP_BYTES:
+            if not checked:
+                prune, _ = plan(True)
+            break
+        batches = _fetch_checked(enc_df, prune, cols, tokens, ids)
+        if batches is not None:
+            # Spark's own Arrow types: a naive timestamp turns UTC, as
+            # mapInArrow reads it, instead of being re-localized to the
+            # session time zone by createDataFrame
+            out = pa.Table.from_batches(list(fn(batches)), schema=out_schema)
+            out = out.cast(to_arrow_schema(schema))
+            return enc_df.sparkSession.createDataFrame(out, schema) \
+                .where(residual)
+        _sorted_indexes.pop(enc_df, None)  # stale: rebuild on the retry
+    else:
+        prune, _ = plan(True)
+    return prune(enc_df).select(*cols).mapInArrow(fn, schema).where(residual)
 
 
 def scan(enc_df, specs: list[ColumnSpec], out_schema: pa.Schema,
@@ -1212,27 +1386,30 @@ def scan(enc_df, specs: list[ColumnSpec], out_schema: pa.Schema,
          kept, never dropped.
       2. PAGES: inside each surviving row group, the page directory of
          ONE driving column (`page_column`, default the first range/eq
-         conjunct) selects the row spans whose page min/max overlap; ALL
-         projected columns then decode exactly those row-aligned spans
-         (chunk.decode_chunk_rows — skip-without-decode).
+         conjunct) selects the row spans whose page min/max overlap; the
+         driving column's rows in those spans then narrow them to the
+         rows in its bounds (_narrow_runs), and ALL projected columns
+         decode exactly those row-aligned spans (chunk.decode_chunk_rows
+         — skip-without-decode, late materialization).
       3. RESIDUAL: the exact predicate re-applies on the decoded rows as
          a Spark filter (pruning is may-match, same as the reference).
 
     `filters` is a list of (column, op, value) conjuncts; op ∈ {'>=', '>',
     '<=', '<', '=', 'between' (value=(lo,hi)), 'in' (value=iterable)}.
     Bound-based pruning covers numeric and string columns; other types
-    still decode + residual-filter correctly. `indexes` optionally maps a
-    column name to a built SortedKeyIndex: that column's row-group prune
-    becomes an O(log n)-probed rg_id IN-list from the boundary-order
-    binary search instead of a manifest stats scan — the right shape when
-    the same sorted table serves many scans. With `auto_index` (default)
-    the index is built-and-memoized automatically (sorted_index_for) and
-    used whenever the manifest's per-chunk `sorted` flags say the layout
-    is clustered — every range scan on a sorted key gets the O(log n)
-    path for free; unclustered layouts keep the stats-scan prune."""
+    still decode + residual-filter correctly, and decimal conjuncts skip
+    every pruning tier (their stats hold unscaled integers). `indexes`
+    optionally maps a column name to a built SortedKeyIndex: that
+    column's row-group prune becomes an O(log n)-probed rg_id IN-list
+    from the boundary-order binary search instead of a manifest stats
+    scan — the right shape when the same sorted table serves many scans.
+    With `auto_index` (default) on a persisted frame the index is
+    built-and-memoized automatically (sorted_index_for) and used whenever
+    the manifest's per-chunk `sorted` flags say the layout is clustered —
+    every range scan on a sorted key gets the O(log n) path for free, and
+    a selective one runs as one JVM fetch + an in-process decode
+    (_lookup); unclustered layouts keep the stats-scan prune."""
     from pyspark.sql import functions as F
-
-    from .chunk import decode_chunk_rows_multi, page_filter_row_runs
 
     spec_by = {s.name: s for s in specs}
     if page_column is not None and page_column not in spec_by:
@@ -1247,63 +1424,89 @@ def scan(enc_df, specs: list[ColumnSpec], out_schema: pa.Schema,
         c, lo, hi = F.col(col), None, None
         if op in (">=", ">"):
             lo = val
-            residual = residual & (c >= val if op == ">=" else c > val)
+            cond = c >= val if op == ">=" else c > val
         elif op in ("<=", "<"):
             hi = val
-            residual = residual & (c <= val if op == "<=" else c < val)
+            cond = c <= val if op == "<=" else c < val
         elif op in ("=", "=="):
             lo = hi = val
-            eq_probes.append((col, val))
-            residual = residual & (c == val)
+            cond = c == val
         elif op == "between":
             lo, hi = val
-            residual = residual & c.between(lo, hi)
+            cond = c.between(lo, hi)
         elif op == "in":
-            vals = list(val)
-            isin_probes.append((col, vals))
+            val = list(val)
             try:
-                lo, hi = min(vals), max(vals)
+                lo, hi = min(val), max(val)
             except (TypeError, ValueError):
                 pass
-            residual = residual & c.isin(vals)
+            cond = c.isin(val)
         else:
             raise ValueError(f"unsupported scan op: {op!r}")
+        residual = residual & cond
+        if _is_decimal_spec(spec_by[col]):
+            # manifest min/max, bloom, distinct set and page bounds all
+            # hold a decimal's UNSCALED integers, which a caller's literal
+            # does not compare against soundly: the residual alone decides
+            continue
+        if op in ("=", "=="):
+            eq_probes.append((col, val))
+        elif op == "in":
+            isin_probes.append((col, val))
         b = bounds.setdefault(col, [None, None])
         if lo is not None:
             b[0] = lo if b[0] is None else max(b[0], lo)
         if hi is not None:
             b[1] = hi if b[1] is None else min(b[1], hi)
 
-    # tier 1: row-group pruning, every conjunct
-    pruned = enc_df
-    for col, (lo, hi) in bounds.items():
-        idx = (indexes or {}).get(col)
-        if idx is None and auto_index and _is_persisted(enc_df):
-            auto = sorted_index_for(enc_df, col, require_clustered=True)
-            if auto is not None and auto.clustered:
-                idx = auto
-        if idx is not None:
+    auto = auto_index and _is_persisted(enc_df)
+
+    def plan(verify):
+        # tier 1: row-group pruning, every conjunct
+        ids_by, tokens, checked, cand, sizer = {}, [], True, None, None
+        for col, (lo, hi) in bounds.items():
+            idx = (indexes or {}).get(col)
+            if idx is None and auto:
+                token, memo_idx, ok = _memo_index(enc_df, col, True, verify)
+                if memo_idx is not None and memo_idx.clustered:
+                    idx = sizer = memo_idx
+                    tokens.append(token)
+                    checked = checked and ok
+            if idx is None:
+                continue
             try:
                 ids = idx.probe(lo, hi)
             except TypeError:
                 # probe literal incomparable with the JSON-parsed stats
-                # (date/Decimal bounds vs str/float entries) — the stats
-                # prune below handles or skips these types itself
-                ids = None
-            if ids is not None and len(ids) <= _INDEX_ISIN_CAP:
-                pruned = pruned.where(F.col("rg_id").isin(ids))
+                # (date bounds vs str/float entries) — the stats prune
+                # below handles or skips these types itself
                 continue
             # unselective probe: a huge IN-list literal beats nothing —
-            # fall through to the distributed stats prune instead
-        if spec_by[col].phys == codecs.PHYS_BYTE_ARRAY:
-            pruned = prune_rowgroups_str(pruned, col, lo, hi)
-        elif isinstance(lo if lo is not None else hi, (int, float)):
-            pruned = prune_rowgroups(pruned, col, lo, hi)
-    for col, v in eq_probes:
-        pruned = prune_rowgroups_eq(pruned, col, v)      # no bloom → keep
-        pruned = prune_rowgroups_isin(pruned, col, [v])  # no distinct → keep
-    for col, vals in isin_probes:
-        pruned = prune_rowgroups_isin(pruned, col, vals)
+            # the distributed stats prune takes over instead
+            if len(ids) <= _INDEX_ISIN_CAP:
+                ids_by[col] = ids
+                cand = set(ids) if cand is None else cand & set(ids)
+
+        def prune(df):
+            for col, (lo, hi) in bounds.items():
+                if col in ids_by:
+                    df = df.where(F.col("rg_id").isin(ids_by[col]))
+                elif spec_by[col].phys == codecs.PHYS_BYTE_ARRAY:
+                    df = prune_rowgroups_str(df, col, lo, hi)
+                elif isinstance(lo if lo is not None else hi, (int, float)):
+                    df = prune_rowgroups(df, col, lo, hi)
+            for col, v in eq_probes:
+                df = prune_rowgroups_eq(df, col, v)      # no bloom → keep
+                df = prune_rowgroups_isin(df, col, [v])  # no distinct → keep
+            for col, vals in isin_probes:
+                df = prune_rowgroups_isin(df, col, vals)
+            return df
+
+        if not tokens:
+            return prune, None
+        ids = None if indexes or cand is None else sorted(cand)
+        nbytes = None if ids is None else sizer.fetch_bytes(ids)
+        return prune, (tokens, ids, nbytes, checked)
 
     # tier 2: page-level row spans on the driving column. Only bounds the
     # page directory can actually compare qualify (numeric or str/bytes —
@@ -1324,9 +1527,8 @@ def scan(enc_df, specs: list[ColumnSpec], out_schema: pa.Schema,
         # can't prune any page — drop to tier-1 + residual instead of
         # silently walking the page directory with open bounds
         page_column = None
-    drv = spec_by[page_column].name if page_column else None
-    dlo, dhi = bounds.get(drv, (None, None)) if drv else (None, None)
-    sel = pruned.select(*[f"{s.name}_blob" for s in specs])
+    drv = spec_by[page_column] if page_column else None
+    dlo, dhi = bounds.get(page_column, (None, None)) if drv else (None, None)
 
     def fn(batches: Iterator[pa.RecordBatch]) -> Iterator[pa.RecordBatch]:
         for b in batches:
@@ -1334,13 +1536,15 @@ def scan(enc_df, specs: list[ColumnSpec], out_schema: pa.Schema,
             if tbl.num_rows == 0:
                 continue
             views = [_blob_views(tbl, f"{s.name}_blob") for s in specs]
-            dviews = (_blob_views(tbl, f"{drv}_blob") if drv else None)
+            dviews = (_blob_views(tbl, f"{drv.name}_blob") if drv else None)
             cols = [[] for _ in specs]
             for i in range(tbl.num_rows):
                 runs = (page_filter_row_runs(dviews[i], dlo, dhi)
                         if dviews is not None else None)
                 if runs is None:
                     runs = [(0, 1 << 31)]  # clamped to the chunk's n_rows
+                if dviews is not None:
+                    runs = _narrow_runs(dviews[i], drv, runs, lo=dlo, hi=dhi)
                 if not runs:
                     continue
                 # each column's chunk parses ONCE for all runs
@@ -1353,9 +1557,8 @@ def scan(enc_df, specs: list[ColumnSpec], out_schema: pa.Schema,
                     for a in cols]
             yield pa.RecordBatch.from_arrays(arrs, schema=out_schema)
 
-    dec = sel.mapInArrow(fn, from_arrow_schema(out_schema))
-    # tier 3: exact residual predicate
-    return dec.where(residual)
+    return _lookup(enc_df, out_schema, [f"{s.name}_blob" for s in specs],
+                   fn, residual, plan)  # tier 3: exact residual
 
 
 def get(enc_df, specs: list[ColumnSpec], out_schema: pa.Schema,
@@ -1371,57 +1574,74 @@ def get(enc_df, specs: list[ColumnSpec], out_schema: pa.Schema,
       2. DICT-DISTINCT prune (prune_rowgroups_isin) + per-value BLOOM
          CONFIRM: candidates whose recorded distinct set or split-block
          bloom filter prove every key absent drop before any blob
-         decode; blooms are probed per VALUE inside the executor over
-         the manifest meta struct (one µs-scale check per chunk×value).
+         decode; blooms are probed per VALUE next to the decode over the
+         manifest meta struct (one µs-scale check per chunk×value).
       3. PAGE-DIRECTORY ROW RUNS: for each surviving (chunk, value) the
          key column's page directory selects the row spans whose page
-         min/max can hold the value; the merged spans decode ONCE for
-         all projected columns (chunk.decode_chunk_rows_multi —
+         min/max can hold the value; the key rows in them narrow the
+         spans to the matching rows (_narrow_runs), which decode ONCE
+         for all projected columns (chunk.decode_chunk_rows_multi —
          skip-without-decode, reader/columnbuffer.go:158-230).
       4. EXACT residual `key IN values` on the decoded rows.
 
-    `index` optionally supplies a built SortedKeyIndex; otherwise one is
-    built-and-memoized per DataFrame handle (sorted_index_for). Unlike
-    scan()'s range path the index is used even for non-clustered
-    layouts — the prefix-max probe is correct for any overlap pattern,
-    and a point lookup wants the IN-list shape regardless."""
+    `index` optionally supplies a built SortedKeyIndex; otherwise, on a
+    persisted frame, one is built-and-memoized per DataFrame handle
+    (sorted_index_for), and a lookup whose candidates are small runs as
+    one JVM fetch + an in-process decode (_lookup). Unlike scan()'s range
+    path the index is used even for non-clustered layouts — the
+    prefix-max probe is correct for any overlap pattern, and a point
+    lookup wants the IN-list shape regardless. Decimal keys skip tiers
+    1–3 (their stats hold unscaled integers)."""
     from pyspark.sql import functions as F
 
     from . import bloom as _bloom
-    from .chunk import decode_chunk_rows_multi, page_filter_row_runs_multi
 
     spec_by = {s.name: s for s in specs}
     if key_column not in spec_by:
         raise KeyError(f"key column {key_column!r} not in projected specs")
+    key_spec = spec_by[key_column]
     vals = list(values)
+    prunable = not _is_decimal_spec(key_spec)
+    auto = auto_index and index is None and prunable and _is_persisted(enc_df)
 
-    # tier 1: sorted-index probe per value
-    idx = index
-    if idx is None and auto_index and _is_persisted(enc_df):
-        idx = sorted_index_for(enc_df, key_column)
-    pruned = enc_df
-    if idx is not None:
-        try:
-            ids = sorted({i for v in vals for i in idx.lookup(v)})
-        except TypeError:
-            ids = None  # probe type incomparable with stored stats
-        if ids is not None and len(ids) <= _INDEX_ISIN_CAP:
-            pruned = pruned.where(F.col("rg_id").isin(ids))
+    def plan(verify):
+        # tier 1: sorted-index probe per value
+        idx, memo = index, None
+        if auto:
+            token, idx, checked = _memo_index(enc_df, key_column,
+                                              verify=verify)
+        ids = None
+        if idx is not None:
+            try:
+                ids = sorted({i for v in vals for i in idx.lookup(v)})
+            except TypeError:
+                pass  # probe type incomparable with stored stats
+            if ids is not None and len(ids) > _INDEX_ISIN_CAP:
+                ids = None
+            if auto:
+                nbytes = None if ids is None else idx.fetch_bytes(ids)
+                memo = ((token,), ids, nbytes, checked)
 
-    # tier 2a: dictionary-distinct prune (metadata expressions, no UDF)
-    pruned = prune_rowgroups_isin(pruned, key_column, vals)
+        def prune(df):
+            if ids is not None:
+                df = df.where(F.col("rg_id").isin(ids))
+            # tier 2a: dictionary-distinct prune (metadata expressions)
+            return prune_rowgroups_isin(df, key_column, vals) \
+                if prunable else df
+
+        return prune, memo
 
     # tier 2b prep: per-value bloom probe hashes (None = can't disprove)
     # and per-value page-probe eligibility, computed once driver-side
     def _page_probeable(v):
-        return isinstance(v, (str, bytes)) or (
-            isinstance(v, (int, float)) and not isinstance(v, bool))
+        return prunable and (isinstance(v, (str, bytes)) or (
+            isinstance(v, (int, float)) and not isinstance(v, bool)))
 
-    probes = [(v, _bloom_probe_hashes(v), _page_probeable(v)) for v in vals]
+    probes = [(v, _bloom_probe_hashes(v) if prunable else None,
+               _page_probeable(v)) for v in vals]
     key_i = next(i for i, s in enumerate(specs) if s.name == key_column)
-    sel = pruned.select(
-        *[f"{s.name}_blob" for s in specs],
-        F.col(f"{key_column}_meta.bloom").alias("__key_bloom"))
+    sel = [f"{s.name}_blob" for s in specs] + [
+        F.col(f"{key_column}_meta.bloom").alias("__key_bloom")]
 
     def fn(batches: Iterator[pa.RecordBatch]) -> Iterator[pa.RecordBatch]:
         for b in batches:
@@ -1449,6 +1669,8 @@ def get(enc_df, specs: list[ColumnSpec], out_schema: pa.Schema,
                         views[key_i][i], [v for v, _ in live])
                     if runs is None:  # no usable page directory
                         runs = [(0, 1 << 31)]
+                runs = _narrow_runs(views[key_i][i], key_spec, runs,
+                                    values=[v for v, _ in live])
                 if not runs:
                     continue
                 for j in range(len(specs)):
@@ -1460,9 +1682,9 @@ def get(enc_df, specs: list[ColumnSpec], out_schema: pa.Schema,
                     for a in cols]
             yield pa.RecordBatch.from_arrays(arrs, schema=out_schema)
 
-    dec = sel.mapInArrow(fn, from_arrow_schema(out_schema))
     # tier 4: exact residual
-    return dec.where(F.col(key_column).isin(vals))
+    return _lookup(enc_df, out_schema, sel, fn,
+                   F.col(key_column).isin(vals), plan)
 
 
 def from_arrow_schema(schema: pa.Schema):
