@@ -227,6 +227,7 @@ class TestGet:
 
         from tokenc.engine import encode_df, get
         from tokenc.schema import specs_from_arrow_schema
+        from tokenc.sorted_index import SortedKeyIndex
 
         df = (spark.range(20_000).select(
             F.col("id").alias("k"),
@@ -242,6 +243,10 @@ class TestGet:
                 got = get(enc, specs, schema, "price", [probe],
                           auto_index=auto).toPandas()
                 assert got["k"].tolist() == [k], (probe, auto)
+        # an explicit index holds the same unscaled integers
+        idx = SortedKeyIndex.build(enc, "price")
+        got = get(enc, specs, schema, "price", [30], index=idx).toPandas()
+        assert got["k"].tolist() == [3000]
         enc.unpersist()
 
 
@@ -284,6 +289,35 @@ class TestLookupLaunch:
         assert rows == [], "decoded in the calling process"
         assert jobs >= 4  # per lookup: fingerprint + distributed decode
         assert got == want
+
+    def test_decoded_rows_over_cap_decode_distributed(self, doc_enc,
+                                                       monkeypatch):
+        """The cap also bounds the rows decoded in the calling process: a
+        scan of every row, whose decoded rows outgrow the encoded blobs it
+        fetched, drops them and decodes distributed, exactly."""
+        import tokenc.engine as eng
+
+        enc, specs, schema = doc_enc
+
+        def scan_all(**kw):
+            return sorted(eng.scan(enc, specs, schema,
+                                   [("doc_id", ">=", "doc_")], **kw).collect())
+
+        want = scan_all(auto_index=False)
+        scan_all()  # warm
+        idx = eng._sorted_indexes[enc]["doc_id"][2]
+        monkeypatch.setattr(eng, "_LOCAL_LOOKUP_BYTES", idx.fetch_bytes(
+            idx.rg_ids, [s.name for s in specs]))
+        local, real = [], eng._decode_local
+
+        def decode_local(fn, batches):
+            local.append(real(fn, batches))
+            return local[-1]
+
+        monkeypatch.setattr(eng, "_decode_local", decode_local)
+        got = scan_all()
+        assert local == [None], "the fetch was not tried, or not dropped"
+        assert len(got) == 6000 and got == want
 
     def test_fingerprint_checked_when_filter_folds_away(self, spark,
                                                         doc_enc):
@@ -568,12 +602,16 @@ class TestNarrowRuns:
         specs = specs_from_arrow_schema(tbl.schema)
         row = eng._encode_rowgroup(tbl, specs)
 
-        def rows(col, **kw):
+        def rows(col, runs=((0, 1 << 31),), **kw):
             spec = next(s for s in specs if s.name == col)
-            runs = eng._narrow_runs(row[f"{col}_blob"], spec,
-                                    [(0, 1 << 31)], **kw)
-            return [r for a, b in runs
-                    for r in range(a, min(b, tbl.num_rows))], runs
+            runs, key = eng._narrow_runs(row[f"{col}_blob"], spec,
+                                         list(runs), **kw)
+            got = [r for a, b in runs for r in range(a, min(b, tbl.num_rows))]
+            # the key rows come back with the runs, aligned to them
+            assert [str(v) for k in key for v in k.to_pylist()] == \
+                [str(v) for v in tbl.column(col).take(
+                    pa.array(got, pa.int64())).to_pylist()]
+            return got, runs
 
         return rows
 
@@ -593,6 +631,13 @@ class TestNarrowRuns:
     def test_scattered_matches_merge_to_a_superset(self):
         from tokenc.engine import _NARROW_MAX_RUNS
 
-        got, runs = self._rows(300)("i", values=[3])
+        rows = self._rows(300)
+        got, runs = rows("i", values=[3])
         assert len(runs) == _NARROW_MAX_RUNS
         assert set(got) >= {r for r in range(1800) if r % 6 in (0, 4)}
+        # a merged run never spans rows outside the runs it narrows
+        runs_in = [(0, 3), (5, 9), (20, 1800)]
+        got, runs = rows("i", runs=runs_in, values=[3])
+        inside = {r for a, b in runs_in for r in range(a, b)}
+        assert {r for r in inside if r % 6 in (0, 4)} <= set(got) <= inside
+        assert len(runs) == _NARROW_MAX_RUNS

@@ -1217,11 +1217,19 @@ def sorted_index_for(enc_df, column: str, require_clustered: bool = False):
 # better shape anyway (the index only wins when the probe is selective)
 _INDEX_ISIN_CAP = 4096
 # a memo-indexed get/scan whose candidate row groups hold at most this
-# many encoded bytes (all columns) decodes in the calling process after
-# ONE JVM-only fetch job; bigger candidate sets decode distributed
+# many encoded bytes in the projected columns decodes in the calling
+# process after ONE JVM-only fetch job, as long as its decoded rows also
+# stay under it; anything bigger decodes distributed. The bound is the
+# driver's memory, not latency: on 4 vCPUs the in-process path stayed
+# faster up to ~100 MiB fetched and ~170 MiB decoded, while holding the
+# two at 45 + 80 MiB raised the calling process's peak RSS by ~160 MB
 _LOCAL_LOOKUP_BYTES = 64 << 20
-# late materialization re-decodes a column's pages once per row run, so
-# the narrowed runs merge across their smallest gaps down to this many
+# late materialization decodes a paged column's pages once per row run,
+# so the narrowed runs merge across their smallest gaps down to this
+# many. Measured on one 4096-doc, 32 MiB tokens row group: k scattered
+# keys take 4-5 ms at any cap for k=8; at k=256/1024 a cap of 16 takes
+# 15/25 ms, no cap 28/88 ms (~60 us per extra run), and a cap of 1
+# ships every row between the first and last match to the JVM
 _NARROW_MAX_RUNS = 16
 
 
@@ -1237,15 +1245,18 @@ def _narrow_runs(blob, spec: ColumnSpec, runs, values=None, lo=None,
     (an int probe rounds through float32 on a float32 key, as Spark's
     coercion does; NaN keys are kept — Spark orders NaN above every
     value). Null keys never match. Any other key or probe type returns
-    `runs` unchanged. The result is a superset of the matching rows (the
-    residual filter stays exact): closest runs merge until at most
-    _NARROW_MAX_RUNS remain."""
+    `runs` unchanged. → (runs, key): the narrowed runs and the key
+    column's rows under them, one array per run, so the caller need not
+    decode the key chunk again (key is None when nothing was decoded).
+    The runs cover a superset of the matching rows (the residual filter
+    stays exact): runs that span only decoded rows merge across their
+    smallest gaps until at most _NARROW_MAX_RUNS remain."""
     import pyarrow.compute as pc
 
     probes = (list(values) if values is not None
               else [v for v in (lo, hi) if v is not None])
     if not runs or not probes or spec.is_list:
-        return runs
+        return runs, None
     cds, _ = decode_chunk_rows_multi(blob, runs)
     parts = [_rebuild(cd, spec) for cd in cds]
     key = parts[0] if len(parts) == 1 else pa.concat_arrays(parts)
@@ -1272,34 +1283,41 @@ def _narrow_runs(blob, spec: ColumnSpec, runs, values=None, lo=None,
             return (float(np.float32(v)) if is_int(v) and t == pa.float32()
                     else float(v)) + 0.0
     else:
-        return runs
-    key = key.cast(dom)
+        return runs, parts
+    cmp = key.cast(dom)
     if pa.types.is_floating(dom):
-        key = pc.add(key, 0.0)
+        cmp = pc.add(cmp, 0.0)
     if values is not None:
-        mask = pc.is_in(key, value_set=pa.array([conv(v) for v in values],
+        mask = pc.is_in(cmp, value_set=pa.array([conv(v) for v in values],
                                                  dom))
     else:
-        mask = pa.array(np.ones(len(key), bool))
+        mask = pa.array(np.ones(len(cmp), bool))
         if lo is not None:
-            mask = pc.and_(mask, pc.greater_equal(key, pa.scalar(conv(lo), dom)))
+            mask = pc.and_(mask, pc.greater_equal(cmp, pa.scalar(conv(lo), dom)))
         if hi is not None:
-            mask = pc.and_(mask, pc.less_equal(key, pa.scalar(conv(hi), dom)))
+            mask = pc.and_(mask, pc.less_equal(cmp, pa.scalar(conv(hi), dom)))
     if pa.types.is_floating(dom):
-        mask = pc.or_(mask, pc.is_nan(key))
-    hit = np.concatenate([np.arange(r0, r0 + cd.n_rows) for (r0, _), cd
-                          in zip(runs, cds)])[
-        np.asarray(mask.fill_null(False), bool)]
-    if not hit.size:
-        return []
-    gaps = np.diff(hit)
-    brk = np.flatnonzero(gaps > 1)
-    if brk.size >= _NARROW_MAX_RUNS:
-        keep = np.argsort(gaps[brk], kind="stable")[1 - _NARROW_MAX_RUNS:]
-        brk = np.sort(brk[keep])
-    starts = np.concatenate(([hit[0]], hit[brk + 1]))
-    ends = np.concatenate((hit[brk] + 1, [hit[-1] + 1]))
-    return list(zip(starts.tolist(), ends.tolist()))
+        mask = pc.or_(mask, pc.is_nan(cmp))
+    # positions of the matching rows among the decoded ones, and their rows
+    pos = np.flatnonzero(np.asarray(mask.fill_null(False), bool))
+    if not pos.size:
+        return [], []
+    row = np.concatenate([np.arange(r0, r0 + cd.n_rows) for (r0, _), cd
+                          in zip(runs, cds)])[pos]
+    gap = np.diff(pos)
+    # a run may only span decoded rows: break where the rows between two
+    # matches were not all decoded, then merge across the smallest gaps
+    must = np.diff(row) != gap
+    opt = np.flatnonzero((gap > 1) & ~must)
+    room = max(_NARROW_MAX_RUNS - 1 - int(must.sum()), 0)
+    if opt.size > room:
+        opt = opt[np.argsort(gap[opt], kind="stable")[opt.size - room:]]
+    brk = np.sort(np.concatenate((np.flatnonzero(must), opt)))
+    first = np.concatenate(([0], brk + 1))
+    last = np.concatenate((brk, [pos.size - 1]))
+    out = list(zip(row[first].tolist(), (row[last] + 1).tolist()))
+    return out, [key.slice(a, b - a + 1)
+                 for a, b in zip(pos[first].tolist(), pos[last].tolist())]
 
 
 def _fetch_checked(enc_df, prune, cols, tokens, ids):
@@ -1330,16 +1348,34 @@ def _fetch_checked(enc_df, prune, cols, tokens, ids):
     return batches if all(t == fp for t in tokens) else None
 
 
+def _decode_local(fn, batches):
+    """`fn` over the fetched row groups, one at a time → its output
+    batches, or None as soon as they hold more than _LOCAL_LOOKUP_BYTES
+    (the caller then decodes distributed)."""
+    out, size = [], 0
+    for b in batches:
+        for i in range(b.num_rows):
+            for o in fn([b.slice(i, 1)]):
+                size += o.get_total_buffer_size()
+                if size > _LOCAL_LOOKUP_BYTES:
+                    return None
+                out.append(o)
+    return out
+
+
 def _lookup(enc_df, out_schema: pa.Schema, cols, fn, residual, plan):
     """Run a planned get()/scan(). `plan(verify)` → (prune, memo): `prune`
     maps a manifest DataFrame to its candidate row groups (tier 1), and
     `memo` is None unless memoized indexes chose them, else (their
     fingerprint tokens, the candidate rg_ids or None when unavailable for
-    a local fetch, the candidates' encoded bytes, whether the tokens were
-    re-checked). Candidates under _LOCAL_LOOKUP_BYTES are fetched by
-    _fetch_checked and decoded HERE by `fn`, the same per-batch function
-    the distributed path maps over the executors — no Python worker, no
-    separate fingerprint job; a stale memo is dropped and rebuilt, once.
+    a local fetch, the candidates' encoded bytes in the projected
+    columns, whether the tokens were re-checked). Candidates under
+    _LOCAL_LOOKUP_BYTES are fetched by _fetch_checked and decoded HERE by
+    `fn`, the same per-batch function the distributed path maps over the
+    executors — no Python worker, no separate fingerprint job; a stale
+    memo is dropped and rebuilt, once. The local result is a snapshot
+    taken now (one job runs at call time); when its decoded rows would
+    pass _LOCAL_LOOKUP_BYTES it is dropped for the distributed path.
     Everything else decodes distributed (`mapInArrow`) after re-checking
     any memoized index, then the exact `residual` filter applies."""
     from pyspark.sql.pandas.types import to_arrow_schema
@@ -1355,15 +1391,19 @@ def _lookup(enc_df, out_schema: pa.Schema, cols, fn, residual, plan):
                 prune, _ = plan(True)
             break
         batches = _fetch_checked(enc_df, prune, cols, tokens, ids)
-        if batches is not None:
-            # Spark's own Arrow types: a naive timestamp turns UTC, as
-            # mapInArrow reads it, instead of being re-localized to the
-            # session time zone by createDataFrame
-            out = pa.Table.from_batches(list(fn(batches)), schema=out_schema)
-            out = out.cast(to_arrow_schema(schema))
-            return enc_df.sparkSession.createDataFrame(out, schema) \
-                .where(residual)
-        _sorted_indexes.pop(enc_df, None)  # stale: rebuild on the retry
+        if batches is None:
+            _sorted_indexes.pop(enc_df, None)  # stale: rebuild on the retry
+            continue
+        out = _decode_local(fn, batches)
+        if out is None:
+            break  # too many matching rows: the fetch verified the memo
+        # Spark's own Arrow types: a naive timestamp turns UTC, as
+        # mapInArrow reads it, instead of being re-localized to the
+        # session time zone by createDataFrame
+        out = pa.Table.from_batches(out, schema=out_schema)
+        out = out.cast(to_arrow_schema(schema))
+        return enc_df.sparkSession.createDataFrame(out, schema) \
+            .where(residual)
     else:
         prune, _ = plan(True)
     return prune(enc_df).select(*cols).mapInArrow(fn, schema).where(residual)
@@ -1408,7 +1448,10 @@ def scan(enc_df, specs: list[ColumnSpec], out_schema: pa.Schema,
     the manifest's per-chunk `sorted` flags say the layout is clustered —
     every range scan on a sorted key gets the O(log n) path for free, and
     a selective one runs as one JVM fetch + an in-process decode
-    (_lookup); unclustered layouts keep the stats-scan prune."""
+    (_lookup); unclustered layouts keep the stats-scan prune. That
+    selective path is EAGER: its job runs when scan() is called, and the
+    DataFrame returned reads the rows decoded then (bounded by
+    _LOCAL_LOOKUP_BYTES), not a lazy plan over enc_df."""
     from pyspark.sql import functions as F
 
     spec_by = {s.name: s for s in specs}
@@ -1505,7 +1548,8 @@ def scan(enc_df, specs: list[ColumnSpec], out_schema: pa.Schema,
         if not tokens:
             return prune, None
         ids = None if indexes or cand is None else sorted(cand)
-        nbytes = None if ids is None else sizer.fetch_bytes(ids)
+        nbytes = None if ids is None else sizer.fetch_bytes(
+            ids, [s.name for s in specs])
         return prune, (tokens, ids, nbytes, checked)
 
     # tier 2: page-level row spans on the driving column. Only bounds the
@@ -1528,6 +1572,7 @@ def scan(enc_df, specs: list[ColumnSpec], out_schema: pa.Schema,
         # silently walking the page directory with open bounds
         page_column = None
     drv = spec_by[page_column] if page_column else None
+    drv_i = next((j for j, s in enumerate(specs) if s is drv), None)
     dlo, dhi = bounds.get(page_column, (None, None)) if drv else (None, None)
 
     def fn(batches: Iterator[pa.RecordBatch]) -> Iterator[pa.RecordBatch]:
@@ -1543,12 +1588,17 @@ def scan(enc_df, specs: list[ColumnSpec], out_schema: pa.Schema,
                         if dviews is not None else None)
                 if runs is None:
                     runs = [(0, 1 << 31)]  # clamped to the chunk's n_rows
+                key = None
                 if dviews is not None:
-                    runs = _narrow_runs(dviews[i], drv, runs, lo=dlo, hi=dhi)
+                    runs, key = _narrow_runs(dviews[i], drv, runs, lo=dlo,
+                                             hi=dhi)
                 if not runs:
                     continue
                 # each column's chunk parses ONCE for all runs
                 for j, spec in enumerate(specs):
+                    if j == drv_i and key is not None:
+                        cols[j].extend(key)  # decoded while narrowing
+                        continue
                     cds, _ = decode_chunk_rows_multi(views[j][i], runs)
                     cols[j].extend(_rebuild(cd, spec) for cd in cds)
             if not cols[0]:
@@ -1587,11 +1637,15 @@ def get(enc_df, specs: list[ColumnSpec], out_schema: pa.Schema,
     `index` optionally supplies a built SortedKeyIndex; otherwise, on a
     persisted frame, one is built-and-memoized per DataFrame handle
     (sorted_index_for), and a lookup whose candidates are small runs as
-    one JVM fetch + an in-process decode (_lookup). Unlike scan()'s range
-    path the index is used even for non-clustered layouts — the
-    prefix-max probe is correct for any overlap pattern, and a point
-    lookup wants the IN-list shape regardless. Decimal keys skip tiers
-    1–3 (their stats hold unscaled integers)."""
+    one JVM fetch + an in-process decode (_lookup) — eagerly: its job
+    runs when get() is called, and the DataFrame returned reads the rows
+    decoded then (bounded by _LOCAL_LOOKUP_BYTES), not a lazy plan over
+    enc_df. An explicit `index` keeps the lazy distributed path. Unlike
+    scan()'s range path the index is used even for non-clustered
+    layouts — the prefix-max probe is correct for any overlap pattern,
+    and a point lookup wants the IN-list shape regardless. Decimal keys
+    skip tiers 1–3, an explicit `index` included (their stats hold
+    unscaled integers)."""
     from pyspark.sql import functions as F
 
     from . import bloom as _bloom
@@ -1606,7 +1660,8 @@ def get(enc_df, specs: list[ColumnSpec], out_schema: pa.Schema,
 
     def plan(verify):
         # tier 1: sorted-index probe per value
-        idx, memo = index, None
+        # a decimal's index holds unscaled integers: never probe it
+        idx, memo = (index if prunable else None), None
         if auto:
             token, idx, checked = _memo_index(enc_df, key_column,
                                               verify=verify)
@@ -1619,7 +1674,8 @@ def get(enc_df, specs: list[ColumnSpec], out_schema: pa.Schema,
             if ids is not None and len(ids) > _INDEX_ISIN_CAP:
                 ids = None
             if auto:
-                nbytes = None if ids is None else idx.fetch_bytes(ids)
+                nbytes = None if ids is None else idx.fetch_bytes(
+                    ids, [s.name for s in specs])
                 memo = ((token,), ids, nbytes, checked)
 
         def prune(df):
@@ -1669,11 +1725,14 @@ def get(enc_df, specs: list[ColumnSpec], out_schema: pa.Schema,
                         views[key_i][i], [v for v, _ in live])
                     if runs is None:  # no usable page directory
                         runs = [(0, 1 << 31)]
-                runs = _narrow_runs(views[key_i][i], key_spec, runs,
-                                    values=[v for v, _ in live])
+                runs, key = _narrow_runs(views[key_i][i], key_spec, runs,
+                                         values=[v for v, _ in live])
                 if not runs:
                     continue
                 for j in range(len(specs)):
+                    if j == key_i and key is not None:
+                        cols[j].extend(key)  # decoded while narrowing
+                        continue
                     cds, _ = decode_chunk_rows_multi(views[j][i], runs)
                     cols[j].extend(_rebuild(cd, specs[j]) for cd in cds)
             if not cols[0]:

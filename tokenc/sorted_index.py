@@ -34,12 +34,14 @@ import json
 
 class SortedKeyIndex:
     def __init__(self, column: str, entries: list, no_stats_ids: list,
-                 all_chunks_sorted: bool, rg_bytes: dict | None = None):
+                 all_chunks_sorted: bool, rg_bytes: dict | None = None,
+                 byte_cols: list | None = None):
         entries.sort(key=lambda e: (e[0], e[1]))
         self.column = column
-        # rg_id -> encoded bytes of every column's chunk (empty when the
-        # manifest records no enc_bytes)
+        # rg_id -> encoded bytes of each of the `byte_cols` chunks (empty
+        # when the manifest records no enc_bytes)
         self.rg_bytes = rg_bytes or {}
+        self.byte_cols = byte_cols or []
         self.mins = [e[0] for e in entries]
         self.maxs = [e[1] for e in entries]
         self.rg_ids = [e[2] for e in entries]
@@ -58,24 +60,26 @@ class SortedKeyIndex:
 
     @classmethod
     def build(cls, enc_df, column: str) -> "SortedKeyIndex":
-        """One metadata collect over (rg_id, min, max, sorted, encoded
-        bytes summed over every column's meta) — never a blob. Min/max
-        parse from the manifest's JSON stats."""
+        """One metadata collect over (rg_id, min, max, sorted, every
+        column's encoded chunk bytes) — never a blob. Min/max parse from
+        the manifest's JSON stats."""
         from pyspark.sql import functions as F
         from pyspark.sql.types import StructType
 
         metas = [f.name for f in enc_df.schema.fields
-                 if isinstance(f.dataType, StructType)
+                 if f.name.endswith("_meta")
+                 and isinstance(f.dataType, StructType)
                  and "enc_bytes" in f.dataType.fieldNames()]
-        nbytes = sum((F.coalesce(F.col(f"`{m}`.enc_bytes"), F.lit(0))
-                      for m in metas), F.lit(0))
         rows = enc_df.select(
             "rg_id",
             F.col(f"{column}_meta.min_json").alias("mn"),
             F.col(f"{column}_meta.max_json").alias("mx"),
             F.col(f"{column}_meta.sorted").alias("srt"),
-            nbytes.alias("nb")).collect()
-        rg_bytes = {r["rg_id"]: r["nb"] for r in rows} if metas else {}
+            *(F.col(f"`{m}`.enc_bytes").alias(f"nb{i}")
+              for i, m in enumerate(metas))).collect()
+        rg_bytes = {r["rg_id"]: tuple(r[f"nb{i}"] for i in range(len(metas)))
+                    for r in rows} if metas else {}
+        byte_cols = [m[:-len("_meta")] for m in metas]
         entries, no_stats, all_sorted = [], [], True
         kinds = set()
         for r in rows:
@@ -97,7 +101,8 @@ class SortedKeyIndex:
             all_sorted = all_sorted and bool(r["srt"])
         if len(kinds) > 1:  # defensive: never let mixed types hit the sort
             raise TypeError(f"column {column!r} has mixed-type min/max stats")
-        return cls(column, entries, no_stats, all_sorted, rg_bytes)
+        return cls(column, entries, no_stats, all_sorted, rg_bytes,
+                   byte_cols)
 
     def probe(self, lo=None, hi=None) -> list[str]:
         """rg_ids of row groups whose [min, max] may intersect [lo, hi].
@@ -133,12 +138,14 @@ class SortedKeyIndex:
     def lookup(self, value) -> list[str]:
         return self.probe(value, value)
 
-    def fetch_bytes(self, rg_ids) -> int | None:
-        """Encoded bytes of the row groups `rg_ids`, all columns; None when
-        the manifest records no size for one of them."""
+    def fetch_bytes(self, rg_ids, columns) -> int | None:
+        """Encoded bytes of the `columns` chunks of the row groups
+        `rg_ids`; None when the manifest records no size for one of
+        them."""
         try:
-            return sum(self.rg_bytes[i] for i in rg_ids)
-        except KeyError:
+            ix = [self.byte_cols.index(c) for c in columns]
+            return sum(self.rg_bytes[i][k] for i in rg_ids for k in ix)
+        except (KeyError, ValueError, TypeError):  # unknown id/column/size
             return None
 
     def filter(self, enc_df, lo=None, hi=None):
