@@ -155,8 +155,9 @@ def main():
         .select("rg_id", "n_rows"))
 
     # 13. compound-predicate scan: per-conjunct metadata prunes (min/max +
-    # bloom + distinct) all evaluate on meta structs BEFORE the single
-    # blob-decoding mapInArrow; residual filter after
+    # distinct) all evaluate on meta structs BEFORE the single
+    # blob-decoding mapInArrow, which confirms the '=' conjunct's bloom per
+    # row group; residual filter after
     from tokenc.engine import scan as engine_scan
 
     mspecs = specs_from_arrow_schema(to_arrow_schema(

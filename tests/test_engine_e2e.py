@@ -159,6 +159,26 @@ class TestReadRange:
         assert read_range(enc, specs, schema, n + 5, 10).count() == 0
         assert read_range(enc, specs, schema, n - 3, 100).count() == 3
 
+    def test_content_divergence_raises(self, spark):
+        """The divergence check compares content, not only counts: when
+        the decode job sees a row group with the manifest's row count but
+        another rg_id (content hash), read_range raises instead of
+        slicing rows the manifest never saw."""
+        import uuid
+
+        from pyspark.sql import functions as F
+
+        from tokenc.engine import read_range
+
+        _, enc, specs, schema = self._ordered_enc(spark)
+        # re-evaluated by every action: the manifest collect and the
+        # decode job each see a different rg_id for the same row group
+        fresh = F.udf(lambda: uuid.uuid4().hex, "string").asNondeterministic()
+        drift = enc.withColumn("rg_id", fresh())
+        with pytest.raises(Exception, match="re-materialized"):
+            read_range(drift, specs, schema, 100, 10).collect()
+        assert read_range(enc, specs, schema, 100, 10).count() == 10
+
 
 class TestLogicalTypes:
     """Reference DATE/TIME/TIMESTAMP converted types over INT32/INT64

@@ -50,6 +50,45 @@ class TestLocalMode:
         assert win["doc_id"].combine_chunks().equals(want)
         assert read_table(str(tmp_path / "enc"), specs, offset=10**6, count=5).num_rows == 0
 
+    def test_offset_count_skips_pages(self, tmp_path, monkeypatch):
+        """SkipRows inside a row group: the two boundary groups of an
+        offset/count window decode only the pages under the window, while
+        a whole-file read still decodes every chunk once, whole."""
+        import tokenc.engine as eng
+        from tokenc import chunk
+
+        group, page = 1 << 19, 1 << 17  # rows: 2 x int64 → 4 MiB chunks
+        t = pa.table({"k": pa.array(np.arange(3 * group, dtype=np.int64)),
+                      "v": pa.array(np.random.default_rng(1).integers(
+                          0, 1 << 40, 3 * group))})
+        d = str(tmp_path / "enc")
+        specs = write_table(t, d, target_raw_bytes=8 << 20)
+        spans, real_pages = [], chunk._decode_pages
+
+        def pages(codec, phys, payload, page_span=None):
+            n = len(chunk._parse_page_index(payload)[1])
+            spans.append((0, n) if page_span is None else page_span)
+            return real_pages(codec, phys, payload, page_span)
+
+        monkeypatch.setattr(chunk, "_decode_pages", pages)
+        lo, n = group - 100_000, 240_000  # group 0 page 3, group 1 pages 0-1
+        win = read_table(d, specs, offset=lo, count=n)
+        assert sorted(spans) == [(0, 2), (0, 2), (3, 4), (3, 4)], spans
+        assert win.equals(read_table(d, specs).slice(lo, n))
+        assert win.equals(t.slice(lo, n))
+
+        calls, real_decode = [], eng.decode_chunk
+
+        def decode(blob):
+            calls.append(len(blob))
+            return real_decode(blob)
+
+        monkeypatch.setattr(eng, "decode_chunk", decode)
+        spans.clear()
+        assert read_table(d, specs).equals(t)
+        assert len(calls) == 3 * 2  # row groups x columns, once each
+        assert sorted(spans) == [(0, 4)] * 6  # every page, once
+
     def test_spark_reads_local_output(self, spark, tmp_path, table):
         """Library writer ↔ Spark decoder interop (same format)."""
         from pyspark.sql import functions as F

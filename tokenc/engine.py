@@ -31,9 +31,9 @@ import numpy as np
 import pyarrow as pa
 
 from . import arrow_util, codecs, selector
-from .chunk import (ChunkStats, decode_chunk, decode_chunk_rows,
-                    decode_chunk_rows_multi, encode_chunk,
-                    page_filter_row_runs, page_filter_row_runs_multi)
+from .chunk import (ChunkStats, decode_chunk, decode_chunk_rows_multi,
+                    encode_chunk, page_filter_row_runs,
+                    page_filter_row_runs_multi)
 from .codecs.plain import _ranges_to_indices
 from .schema import ColumnSpec
 
@@ -601,13 +601,12 @@ def encode_df(df, specs: list[ColumnSpec], *,
 # decode
 # --------------------------------------------------------------------------
 
-DECODE_BATCH_BYTES = 64 << 20  # blob bytes per yielded output batch
-
-
 def _blob_views(tbl: pa.Table, name: str) -> list[np.ndarray]:
     """Per-row zero-copy numpy views of a binary column's payloads — no
     .as_py() copies: one view straight into the Arrow data buffer per blob."""
-    col = tbl.column(name).combine_chunks()
+    col = tbl.column(name)
+    # combine_chunks copies even a single chunk
+    col = col.chunk(0) if col.num_chunks == 1 else col.combine_chunks()
     bufs = col.buffers()
     off_dtype = np.int64 if pa.types.is_large_binary(col.type) else np.int32
     offs = np.frombuffer(bufs[1], off_dtype)[col.offset: col.offset + len(col) + 1]
@@ -616,37 +615,53 @@ def _blob_views(tbl: pa.Table, name: str) -> list[np.ndarray]:
     return [data[offs[i]:offs[i + 1]] for i in range(len(col))]
 
 
-def make_decoder(specs: list[ColumnSpec], out_schema: pa.Schema):
-    """mapInArrow decode: zero-copy views into the scanned blob buffers,
-    multiple row groups decoded per yielded RecordBatch (amortizes the
-    Python→JVM Arrow framing over ~DECODE_BATCH_BYTES of payload)."""
+def _read_fn(specs: list[ColumnSpec], out_schema: pa.Schema, rows=None):
+    """The row-group read operator: the one per-batch function every
+    row-returning read runs, over batches of blob rows (one row group per
+    row, `<col>_blob` columns) from the JVM (mapInArrow, _lookup's
+    in-process fetch) or from pyarrow (files.decode_files,
+    local.read_table). The optional planner `rows(tbl, views, i)` → (runs,
+    done) for row group i: the row runs [(row_lo, row_hi), ...] to keep
+    (None: the whole chunk, []: skip the group) and {column position: its
+    rebuilt arrays, one per run} for a column it already decoded over
+    them (or None). Every other column decodes once — whole through
+    decode_chunk, runs through decode_chunk_rows_multi (skip-without-
+    decode, reader/columnbuffer.go:158-230) — and one RecordBatch comes
+    out per row group, fixed-size binary cast to binary where `out_schema`
+    says binary (Spark has no fixed-size binary type)."""
+    to_binary = [pa.types.is_binary(f.type) for f in out_schema]
 
-    def decode_fn(batches: Iterator[pa.RecordBatch]) -> Iterator[pa.RecordBatch]:
+    def fn(batches: Iterator[pa.RecordBatch]) -> Iterator[pa.RecordBatch]:
         for b in batches:
             tbl = pa.Table.from_batches([b])
-            n = tbl.num_rows
-            if n == 0:
-                continue
             views = [_blob_views(tbl, f"{s.name}_blob") for s in specs]
-            start, acc = 0, 0
-            for i in range(n):
-                acc += sum(len(v[i]) for v in views)
-                if acc < DECODE_BATCH_BYTES and i < n - 1:
-                    continue
+            for i in range(tbl.num_rows):
+                runs, done = (None, None) if rows is None \
+                    else rows(tbl, views, i)
+                if runs is not None and not runs:
+                    continue  # no row of this group can match
                 cols = []
                 for j, spec in enumerate(specs):
-                    arrs = [_rebuild(decode_chunk(views[j][x]), spec)
-                            for x in range(start, i + 1)]
-                    cols.append(arrs[0] if len(arrs) == 1 else pa.concat_arrays(arrs))
+                    if done and j in done:
+                        arrs = done[j]
+                    elif runs is None:
+                        arrs = [_rebuild(decode_chunk(views[j][i]), spec)]
+                    else:
+                        # the chunk parses ONCE for all runs
+                        cds, _ = decode_chunk_rows_multi(views[j][i], runs)
+                        arrs = [_rebuild(cd, spec) for cd in cds]
+                    arr = arrs[0] if len(arrs) == 1 else pa.concat_arrays(arrs)
+                    if to_binary[j] and pa.types.is_fixed_size_binary(arr.type):
+                        arr = arr.cast(pa.binary())
+                    cols.append(arr)
                 yield pa.RecordBatch.from_arrays(cols, schema=out_schema)
-                start, acc = i + 1, 0
 
-    return decode_fn
+    return fn
 
 
 def decode_df(enc_df, specs: list[ColumnSpec], out_schema: pa.Schema):
-    fn = make_decoder(specs, out_schema)
-    return enc_df.mapInArrow(fn, from_arrow_schema(out_schema))
+    return enc_df.mapInArrow(_read_fn(specs, out_schema),
+                             from_arrow_schema(out_schema))
 
 
 INVARIANT_FIELDS = pa.schema([
@@ -726,12 +741,15 @@ def read_range(enc_df, specs: list[ColumnSpec], out_schema: pa.Schema,
     the distributed SkipRows / ReadByNumber analog (reader/reader.go:179-253,
     reader/columnbuffer.go:158-230): row groups wholly before/after the range
     are filtered out on their manifest row counts and NEVER decoded; the two
-    boundary row groups are decoded and sliced.
+    boundary row groups decode only the pages holding the requested rows.
+    A planner over the one read operator (_read_fn): the row run of each
+    boundary group, plus the divergence check below.
 
     Row order across groups is (rg_part, rg_idx); it equals a global row
     order whenever the encode input was ordered (repartitionByRange +
     sortWithinPartitions) or single-partition. Driver-side state is one tiny
-    (rg_part, rg_idx, n_rows) row per row group — the footer read, not data.
+    (rg_part, rg_idx, n_rows, rg_id) row per row group — the footer read,
+    not data.
 
     `enc_df` must be PINNED to one materialization (persisted+materialized,
     or a deterministic lineage such as a parquet read): this call runs two
@@ -740,91 +758,83 @@ def read_range(enc_df, specs: list[ColumnSpec], out_schema: pa.Schema,
     per action, so the decode job's row groups can hold different row
     counts than the manifest the slice bounds were computed from (the same
     two-action hazard documented at _is_persisted / pipeline.packing).
-    Divergence of any overlapping group's row count is detected inside
-    the decode and raised loudly instead of returning a silently shifted
-    slice (expected counts ship for every overlapping group up to a
-    closure-size cap; beyond it, boundary groups still check).
+    Divergence of any overlapping group's row count or content hash
+    (rg_id) is detected inside the decode and raised loudly instead of
+    returning a silently shifted slice (the expected pair ships for every
+    overlapping group up to a closure-size cap; beyond it, boundary groups
+    still check).
     """
     from pyspark.sql import functions as F
 
-    man = (enc_df.select("rg_part", "rg_idx", "n_rows")
+    man = (enc_df.select("rg_part", "rg_idx", "n_rows", "rg_id")
            .toPandas().sort_values(["rg_part", "rg_idx"]).reset_index(drop=True))
-    lo, hi = offset, offset + count
-    # vectorized overlap computation — the manifest may have millions of
-    # rows at scale; no python-level row loop
-    n_rows_arr = man["n_rows"].to_numpy(np.int64)
-    ends = np.cumsum(n_rows_arr)
-    starts = ends - n_rows_arr
-    sel = (ends > lo) & (starts < hi)
+    n_rows = man["n_rows"].to_numpy(np.int64)
+    sel, skips, takes = _overlaps(n_rows, offset, offset + count)
     keys = ((man["rg_part"].to_numpy(np.int64) << 32)
             | man["rg_idx"].to_numpy(np.int64))[sel]
-    skips = np.maximum(0, lo - starts[sel])
-    takes = np.minimum(ends[sel], hi) - np.maximum(starts[sel], lo)
-    # only the (≤2) PARTIAL boundary groups need per-group slice bounds;
-    # interior groups decode whole. The overlapping groups are consecutive
-    # in (rg_part, rg_idx) order, so one BETWEEN on the composite key prunes
-    # exactly — O(1) expression size however many row groups the manifest
-    # holds (vs an isin() list that would reach megabytes at 100 TB)
-    bounds: dict[int, tuple[int, int, int]] = {
-        int(k): (int(s), int(t), int(n)) for k, s, t, n in
-        zip(keys, skips, takes, n_rows_arr[sel])
-        if s != 0 or t != n}
-    # divergence detection needs the expected row count of EVERY
-    # overlapping group, not just the partial boundary ones — a
-    # re-materialized lineage shifts interior counts too, and an interior
-    # group with no bounds entry would decode whole at the wrong size.
-    # Capped so a pathological full-table range doesn't ship a huge
-    # closure; beyond the cap boundary groups still check (re-sampled
-    # boundaries move every group's count, so they fire in practice).
+    ns, ids = n_rows[sel], man["rg_id"].to_numpy()[sel]
+    # only the (≤2) PARTIAL boundary groups need a row run; interior groups
+    # decode whole. The overlapping groups are consecutive in (rg_part,
+    # rg_idx) order, so one BETWEEN on the composite key prunes exactly —
+    # O(1) expression size however many row groups the manifest holds (vs
+    # an isin() list that would reach megabytes at 100 TB)
+    part = (skips != 0) | (takes != ns)
+    bounds = {int(k): (int(s), int(s + t))
+              for k, s, t in zip(keys[part], skips[part], takes[part])}
+    # divergence detection needs the expected row count AND content hash
+    # (rg_id: n_rows plus every blob's head and tail) of EVERY overlapping
+    # group, not just the partial boundary ones — a re-materialized
+    # lineage shifts interior groups too, and one with no run would decode
+    # whole with the wrong rows. Capped so a pathological full-table range
+    # doesn't ship a huge closure; beyond the cap boundary groups still
+    # check (re-sampled boundaries move every group, so they fire in
+    # practice).
     _EXPECT_CAP = 1 << 17
-    expect_n: dict[int, int] = (
-        {int(k): int(n) for k, n in zip(keys, n_rows_arr[sel])}
-        if keys.size <= _EXPECT_CAP else
-        {k: n for k, (s, t, n) in bounds.items()})
+    chk = part if keys.size > _EXPECT_CAP else np.ones(keys.size, bool)
+    expect = {int(k): (int(n), r)
+              for k, n, r in zip(keys[chk], ns[chk], ids[chk])}
     key_col = (F.shiftleft(F.col("rg_part").cast("long"), 32)
                + F.col("rg_idx").cast("long"))
     pruned = enc_df.where(
         key_col.between(int(keys[0]), int(keys[-1])) if keys.size
         else F.lit(False))
 
-    def decode_slice(batches: Iterator[pa.RecordBatch]) -> Iterator[pa.RecordBatch]:
-        for b in batches:
-            tbl = pa.Table.from_batches([b])
-            parts = tbl.column("rg_part").to_pylist()
-            idxs = tbl.column("rg_idx").to_pylist()
-            views = [_blob_views(tbl, f"{s.name}_blob") for s in specs]
-            n_rows_col = tbl.column("n_rows").to_pylist()
-            # one row group per input row; interior groups decode fully,
-            # boundary groups decode ONLY the sub-chunk pages overlapping
-            # the requested rows (decode_chunk_rows)
-            for i in range(tbl.num_rows):
-                key = (parts[i] << 32) | idxs[i]
-                exp = expect_n.get(key)
-                if exp is not None and n_rows_col[i] != exp:
-                    # the decode job materialized DIFFERENT row groups
-                    # than the manifest collect (re-sampled
-                    # repartitionByRange boundaries in an unpersisted
-                    # lineage) — slicing would silently shift rows
-                    raise RuntimeError(
-                        "read_range: row group (%d,%d) holds %d rows "
-                        "but the manifest pass saw %d — the input "
-                        "lineage re-materialized between the two "
-                        "actions. persist() + materialize enc_df (or "
-                        "encode from a deterministic source) before "
-                        "read_range." % (parts[i], idxs[i],
-                                         n_rows_col[i], exp))
-                ent = bounds.get(key)
-                skip, take = ent[:2] if ent is not None else (0, n_rows_col[i])
-                if skip == 0 and take == n_rows_col[i]:
-                    cols = [_rebuild(decode_chunk(views[j][i]), spec)
-                            for j, spec in enumerate(specs)]
-                else:
-                    cols = [_rebuild(decode_chunk_rows(views[j][i], skip,
-                                                       skip + take)[0], spec)
-                            for j, spec in enumerate(specs)]
-                yield pa.RecordBatch.from_arrays(cols, schema=out_schema)
+    def rows(tbl, views, i):
+        rg = [tbl.column(c)[i].as_py()
+              for c in ("rg_part", "rg_idx", "n_rows", "rg_id")]
+        key = (rg[0] << 32) | rg[1]
+        exp = expect.get(key)
+        if exp is not None and tuple(rg[2:]) != exp:
+            # the decode job materialized DIFFERENT row groups than the
+            # manifest collect (re-sampled repartitionByRange boundaries
+            # in an unpersisted lineage) — slicing would silently shift
+            # or swap rows
+            raise RuntimeError(
+                "read_range: row group (%d,%d) holds %d rows with rg_id "
+                "%s but the manifest pass saw %d rows with rg_id %s — the "
+                "input lineage re-materialized between the two actions. "
+                "persist() + materialize enc_df (or encode from a "
+                "deterministic source) before read_range."
+                % (rg[0], rg[1], rg[2], rg[3], exp[0], exp[1]))
+        run = bounds.get(key)
+        return (None if run is None else [run]), None
 
-    return pruned.mapInArrow(decode_slice, from_arrow_schema(out_schema))
+    return pruned.mapInArrow(_read_fn(specs, out_schema, rows),
+                             from_arrow_schema(out_schema))
+
+
+def _overlaps(n_rows: np.ndarray, lo: int, hi: int):
+    """Row counts of row groups in read order and a row range [lo, hi) →
+    (mask of the groups overlapping it, and per overlapping group the rows
+    to skip and to take) — the SkipRows/ReadByNumber arithmetic
+    (reader/reader.go:179-253), vectorized: a manifest may hold millions
+    of row groups, so no Python-level row loop."""
+    ends = np.cumsum(n_rows)
+    starts = ends - n_rows
+    sel = (ends > lo) & (starts < hi)
+    skips = np.maximum(0, lo - starts[sel])
+    takes = np.minimum(ends[sel], hi) - np.maximum(starts[sel], lo)
+    return sel, skips, takes
 
 
 def prune_rowgroups(enc_df, column: str, lo=None, hi=None):
@@ -1065,33 +1075,23 @@ def decode_filtered(enc_df, spec: ColumnSpec, out_schema: pa.Schema,
     """Predicate-pruned single-column decode: row groups outside [lo, hi]
     drop on manifest min/max BEFORE any scan (prune_rowgroups /
     prune_rowgroups_str), then inside each surviving blob only the
-    sub-chunk PAGES whose min/max overlap are decoded
-    (chunk.decode_chunk_filter — the reference's ColumnIndex-driven page
-    skip, reader/columnbuffer.go:158-230 + writer/writer.go:418-481).
+    sub-chunk PAGES whose min/max overlap are decoded — the reference's
+    ColumnIndex-driven page skip (reader/columnbuffer.go:158-230 +
+    writer/writer.go:418-481), planned per chunk by
+    chunk.page_filter_row_runs over the one read operator (_read_fn).
     String columns prune on lexicographic stats + covering 8-byte page
     prefix bounds (lo/hi as str/bytes). Returns candidate rows; callers
     reapply the exact predicate."""
-    from .chunk import decode_chunk_filter
-
     if spec.phys == codecs.PHYS_BYTE_ARRAY:
-        pruned = prune_rowgroups_str(enc_df, spec.name, lo, hi) \
-            .select(f"{spec.name}_blob")
+        pruned = prune_rowgroups_str(enc_df, spec.name, lo, hi)
     else:
-        pruned = prune_rowgroups(enc_df, spec.name, lo, hi) \
-            .select(f"{spec.name}_blob")
+        pruned = prune_rowgroups(enc_df, spec.name, lo, hi)
 
-    def fn(batches: Iterator[pa.RecordBatch]) -> Iterator[pa.RecordBatch]:
-        for b in batches:
-            tbl = pa.Table.from_batches([b])
-            if tbl.num_rows == 0:
-                continue
-            views = _blob_views(tbl, f"{spec.name}_blob")
-            arrs = [_rebuild(decode_chunk_filter(v, lo, hi)[0], spec)
-                    for v in views]
-            arr = arrs[0] if len(arrs) == 1 else pa.concat_arrays(arrs)
-            yield pa.RecordBatch.from_arrays([arr], schema=out_schema)
+    def rows(tbl, views, i):
+        return page_filter_row_runs(views[0][i], lo, hi), None
 
-    return pruned.mapInArrow(fn, from_arrow_schema(out_schema))
+    return pruned.select(f"{spec.name}_blob").mapInArrow(
+        _read_fn([spec], out_schema, rows), from_arrow_schema(out_schema))
 
 
 _sorted_indexes = None  # weakref.WeakKeyDictionary, created on first use
@@ -1326,7 +1326,8 @@ def _fetch_checked(enc_df, prune, cols, tokens, ids):
     manifest, its materialization fingerprint → the fetched
     RecordBatches, or None when the fingerprint differs from a memo
     token (the index was built on another materialization). The job is
-    JVM-only unless `prune` carries a scan's bloom UDF ('=' conjuncts)."""
+    JVM-only: every prune tier is a JVM expression, and bloom filters are
+    confirmed by the read operator's planner, in this process."""
     from py4j.protocol import Py4JJavaError
     from pyspark.sql import Observation
 
@@ -1349,17 +1350,15 @@ def _fetch_checked(enc_df, prune, cols, tokens, ids):
 
 
 def _decode_local(fn, batches):
-    """`fn` over the fetched row groups, one at a time → its output
-    batches, or None as soon as they hold more than _LOCAL_LOOKUP_BYTES
-    (the caller then decodes distributed)."""
+    """`fn` (the read operator, one output batch per row group) over the
+    fetched row groups → its output batches, or None as soon as they hold
+    more than _LOCAL_LOOKUP_BYTES (the caller then decodes distributed)."""
     out, size = [], 0
-    for b in batches:
-        for i in range(b.num_rows):
-            for o in fn([b.slice(i, 1)]):
-                size += o.get_total_buffer_size()
-                if size > _LOCAL_LOOKUP_BYTES:
-                    return None
-                out.append(o)
+    for o in fn(batches):
+        size += o.get_total_buffer_size()
+        if size > _LOCAL_LOOKUP_BYTES:
+            return None
+        out.append(o)
     return out
 
 
@@ -1420,17 +1419,20 @@ def scan(enc_df, specs: list[ColumnSpec], out_schema: pa.Schema,
     also per-column and composed by the reader):
 
       1. ROW GROUPS: every conjunct prunes on manifest metadata — min/max
-         range stats (numeric + lexicographic string), bloom point
-         lookups, and dictionary-distinct IN-lists. Pure JVM expressions
-         / metadata-scale UDFs; chunks without the relevant stats are
-         kept, never dropped.
+         range stats (numeric + lexicographic string) or a sorted-index
+         rg_id IN-list, plus dictionary-distinct sets for point conjuncts
+         ('='/'in'); pure JVM expressions, chunks without the relevant
+         stats kept. The decode task then confirms each point conjunct's
+         values against the chunk's bloom filter (one µs-scale check per
+         chunk×value) and skips the group when none can be present.
       2. PAGES: inside each surviving row group, the page directory of
-         ONE driving column (`page_column`, default the first range/eq
-         conjunct) selects the row spans whose page min/max overlap; the
-         driving column's rows in those spans then narrow them to the
-         rows in its bounds (_narrow_runs), and ALL projected columns
-         decode exactly those row-aligned spans (chunk.decode_chunk_rows
-         — skip-without-decode, late materialization).
+         ONE driving column (`page_column`, default the first conjunct
+         the page bounds can compare) selects the row spans that can hold
+         its bounds or live point values; the driving column's rows then
+         narrow them to the matching rows (_narrow_runs), and ALL
+         projected columns decode exactly those row-aligned spans
+         (chunk.decode_chunk_rows_multi — skip-without-decode, late
+         materialization) in the one read operator (_read_fn).
       3. RESIDUAL: the exact predicate re-applies on the decoded rows as
          a Spark filter (pruning is may-match, same as the reference).
 
@@ -1441,25 +1443,27 @@ def scan(enc_df, specs: list[ColumnSpec], out_schema: pa.Schema,
     every pruning tier (their stats hold unscaled integers). `indexes`
     optionally maps a column name to a built SortedKeyIndex: that
     column's row-group prune becomes an O(log n)-probed rg_id IN-list
-    from the boundary-order binary search instead of a manifest stats
-    scan — the right shape when the same sorted table serves many scans.
-    With `auto_index` (default) on a persisted frame the index is
-    built-and-memoized automatically (sorted_index_for) and used whenever
-    the manifest's per-chunk `sorted` flags say the layout is clustered —
-    every range scan on a sorted key gets the O(log n) path for free, and
-    a selective one runs as one JVM fetch + an in-process decode
-    (_lookup); unclustered layouts keep the stats-scan prune. That
-    selective path is EAGER: its job runs when scan() is called, and the
-    DataFrame returned reads the rows decoded then (bounded by
-    _LOCAL_LOOKUP_BYTES), not a lazy plan over enc_df."""
+    (per range, or per value of a point conjunct) from the boundary-order
+    binary search instead of a manifest stats scan — the right shape
+    when the same sorted table serves many scans. With `auto_index`
+    (default) on a persisted frame the index is built-and-memoized
+    automatically (sorted_index_for): point conjuncts always use it,
+    range conjuncts whenever the manifest's per-chunk `sorted` flags say
+    the layout is clustered (unclustered layouts keep the stats-scan
+    prune), and a selective one runs as one JVM fetch + an in-process
+    decode (_lookup). That selective path is EAGER: its job runs when
+    scan() is called, and the DataFrame returned reads the rows decoded
+    then (bounded by _LOCAL_LOOKUP_BYTES), not a lazy plan over enc_df."""
     from pyspark.sql import functions as F
+
+    from . import bloom as _bloom
 
     spec_by = {s.name: s for s in specs}
     if page_column is not None and page_column not in spec_by:
         raise KeyError(
             f"page_column {page_column!r} not in projected specs")
     bounds: dict[str, list] = {}
-    eq_probes, isin_probes = [], []
+    points: dict[str, list] = {}  # column → its first point conjunct's values
     residual = F.lit(True)
     for col, op, val in filters:
         if col not in spec_by:
@@ -1492,10 +1496,9 @@ def scan(enc_df, specs: list[ColumnSpec], out_schema: pa.Schema,
             # hold a decimal's UNSCALED integers, which a caller's literal
             # does not compare against soundly: the residual alone decides
             continue
-        if op in ("=", "=="):
-            eq_probes.append((col, val))
-        elif op == "in":
-            isin_probes.append((col, val))
+        if op in ("=", "==", "in"):
+            # any one point conjunct's values bound the matching rows
+            points.setdefault(col, val if op == "in" else [val])
         b = bounds.setdefault(col, [None, None])
         if lo is not None:
             b[0] = lo if b[0] is None else max(b[0], lo)
@@ -1508,17 +1511,21 @@ def scan(enc_df, specs: list[ColumnSpec], out_schema: pa.Schema,
         # tier 1: row-group pruning, every conjunct
         ids_by, tokens, checked, cand, sizer = {}, [], True, None, None
         for col, (lo, hi) in bounds.items():
+            vals = points.get(col)
             idx = (indexes or {}).get(col)
             if idx is None and auto:
-                token, memo_idx, ok = _memo_index(enc_df, col, True, verify)
-                if memo_idx is not None and memo_idx.clustered:
+                token, memo_idx, ok = _memo_index(enc_df, col, vals is None,
+                                                  verify)
+                if memo_idx is not None and (vals is not None
+                                             or memo_idx.clustered):
                     idx = sizer = memo_idx
                     tokens.append(token)
                     checked = checked and ok
             if idx is None:
                 continue
             try:
-                ids = idx.probe(lo, hi)
+                ids = (idx.probe(lo, hi) if vals is None
+                       else sorted({i for v in vals for i in idx.lookup(v)}))
             except TypeError:
                 # probe literal incomparable with the JSON-parsed stats
                 # (date bounds vs str/float entries) — the stats prune
@@ -1538,11 +1545,8 @@ def scan(enc_df, specs: list[ColumnSpec], out_schema: pa.Schema,
                     df = prune_rowgroups_str(df, col, lo, hi)
                 elif isinstance(lo if lo is not None else hi, (int, float)):
                     df = prune_rowgroups(df, col, lo, hi)
-            for col, v in eq_probes:
-                df = prune_rowgroups_eq(df, col, v)      # no bloom → keep
-                df = prune_rowgroups_isin(df, col, [v])  # no distinct → keep
-            for col, vals in isin_probes:
-                df = prune_rowgroups_isin(df, col, vals)
+            for col, vals in points.items():
+                df = prune_rowgroups_isin(df, col, vals)  # no distinct → keep
             return df
 
         if not tokens:
@@ -1552,16 +1556,17 @@ def scan(enc_df, specs: list[ColumnSpec], out_schema: pa.Schema,
             ids, [s.name for s in specs])
         return prune, (tokens, ids, nbytes, checked)
 
-    # tier 2: page-level row spans on the driving column. Only bounds the
-    # page directory can actually compare qualify (numeric or str/bytes —
-    # a date/Decimal literal against raw numeric page stats would
-    # TypeError in the executor); anything else decodes fully and the
-    # residual filter stays exact.
-    def _pageable(c):
-        vs = [v for v in bounds.get(c, (None, None)) if v is not None]
+    # tier 2: page-level row spans on the driving column. Only values the
+    # page directory can actually compare qualify (str/bytes on a string
+    # column, numbers on a numeric one — a date/Decimal literal against
+    # raw numeric page stats would TypeError in the executor); anything
+    # else decodes fully and the residual filter stays exact.
+    def _pageable(col):
+        vs = points.get(col) or [v for v in bounds[col] if v is not None]
+        ba = spec_by[col].phys == codecs.PHYS_BYTE_ARRAY
         return bool(vs) and all(
-            isinstance(v, (str, bytes))
-            or (isinstance(v, (int, float)) and not isinstance(v, bool))
+            isinstance(v, (str, bytes)) if ba
+            else isinstance(v, (int, float)) and not isinstance(v, bool)
             for v in vs)
 
     if page_column is None:
@@ -1571,179 +1576,66 @@ def scan(enc_df, specs: list[ColumnSpec], out_schema: pa.Schema,
         # can't prune any page — drop to tier-1 + residual instead of
         # silently walking the page directory with open bounds
         page_column = None
-    drv = spec_by[page_column] if page_column else None
-    drv_i = next((j for j, s in enumerate(specs) if s is drv), None)
-    dlo, dhi = bounds.get(page_column, (None, None)) if drv else (None, None)
+    drv_i = next((j for j, s in enumerate(specs) if s.name == page_column),
+                 None)
+    dlo, dhi = bounds.get(page_column, (None, None))
+    # per point column, per value: bloom probe hashes (None = can't
+    # disprove), computed once here
+    probes = [(col, [(v, _bloom_probe_hashes(v)) for v in vals])
+              for col, vals in points.items()]
 
-    def fn(batches: Iterator[pa.RecordBatch]) -> Iterator[pa.RecordBatch]:
-        for b in batches:
-            tbl = pa.Table.from_batches([b])
-            if tbl.num_rows == 0:
-                continue
-            views = [_blob_views(tbl, f"{s.name}_blob") for s in specs]
-            dviews = (_blob_views(tbl, f"{drv.name}_blob") if drv else None)
-            cols = [[] for _ in specs]
-            for i in range(tbl.num_rows):
-                runs = (page_filter_row_runs(dviews[i], dlo, dhi)
-                        if dviews is not None else None)
-                if runs is None:
-                    runs = [(0, 1 << 31)]  # clamped to the chunk's n_rows
-                key = None
-                if dviews is not None:
-                    runs, key = _narrow_runs(dviews[i], drv, runs, lo=dlo,
-                                             hi=dhi)
-                if not runs:
-                    continue
-                # each column's chunk parses ONCE for all runs
-                for j, spec in enumerate(specs):
-                    if j == drv_i and key is not None:
-                        cols[j].extend(key)  # decoded while narrowing
-                        continue
-                    cds, _ = decode_chunk_rows_multi(views[j][i], runs)
-                    cols[j].extend(_rebuild(cd, spec) for cd in cds)
-            if not cols[0]:
-                continue
-            arrs = [a[0] if len(a) == 1 else pa.concat_arrays(a)
-                    for a in cols]
-            yield pa.RecordBatch.from_arrays(arrs, schema=out_schema)
+    def rows(tbl, views, i):
+        live = {}
+        for k, (col, hashes) in enumerate(probes):
+            bb = tbl.column(f"__bloom{k}")[i].as_py()
+            live[col] = [v for v, hs in hashes
+                         if bb is None or hs is None
+                         or bool(_bloom.might_contain(bb, hs).any())]
+            if not live[col]:
+                return [], None  # the bloom proves every value absent
+        if drv_i is None:
+            return None, None
+        blob, vals = views[drv_i][i], live.get(page_column)
+        # ONE parse (incl. decompression) for all k point values
+        runs = (page_filter_row_runs(blob, dlo, dhi) if vals is None
+                else page_filter_row_runs_multi(blob, vals))
+        runs, key = _narrow_runs(blob, specs[drv_i],
+                                 [(0, 1 << 31)] if runs is None else runs,
+                                 values=vals, lo=dlo, hi=dhi)
+        return runs, None if key is None else {drv_i: key}
 
-    return _lookup(enc_df, out_schema, [f"{s.name}_blob" for s in specs],
-                   fn, residual, plan)  # tier 3: exact residual
+    cols = [f"{s.name}_blob" for s in specs] + [
+        F.col(f"{col}_meta.bloom").alias(f"__bloom{k}")
+        for k, (col, _) in enumerate(probes)]
+    return _lookup(enc_df, out_schema, cols, _read_fn(specs, out_schema, rows),
+                   residual, plan)  # tier 3: exact residual
 
 
 def get(enc_df, specs: list[ColumnSpec], out_schema: pa.Schema,
         key_column: str, values, index=None, auto_index: bool = True):
     """Point fetch: the full decoded rows for k scattered key values —
     the reference's SkipRows+ReadByNumber analog at its sharpest
-    (reader/reader.go:179-253), composed from every lookup structure the
-    manifest carries:
-
-      1. SORTED-INDEX PROBE (driver, O(log n) bound comparisons per key,
-         tokenc/sorted_index.py): binary-search the boundary-order
-         row-group bounds per value → a tiny candidate rg_id IN-list.
-      2. DICT-DISTINCT prune (prune_rowgroups_isin) + per-value BLOOM
-         CONFIRM: candidates whose recorded distinct set or split-block
-         bloom filter prove every key absent drop before any blob
-         decode; blooms are probed per VALUE next to the decode over the
-         manifest meta struct (one µs-scale check per chunk×value).
-      3. PAGE-DIRECTORY ROW RUNS: for each surviving (chunk, value) the
-         key column's page directory selects the row spans whose page
-         min/max can hold the value; the key rows in them narrow the
-         spans to the matching rows (_narrow_runs), which decode ONCE
-         for all projected columns (chunk.decode_chunk_rows_multi —
-         skip-without-decode, reader/columnbuffer.go:158-230).
-      4. EXACT residual `key IN values` on the decoded rows.
+    (reader/reader.go:179-253). It is scan() with ONE point conjunct,
+    `key_column IN values`: a sorted-index probe per value (O(log n)
+    bound comparisons, tokenc/sorted_index.py) → a tiny candidate rg_id
+    IN-list, the dictionary-distinct prune, a per-value bloom confirm in
+    the decode task, the key column's page-directory row runs narrowed
+    to the matching rows (late materialization), and the exact residual.
 
     `index` optionally supplies a built SortedKeyIndex; otherwise, on a
     persisted frame, one is built-and-memoized per DataFrame handle
-    (sorted_index_for), and a lookup whose candidates are small runs as
-    one JVM fetch + an in-process decode (_lookup) — eagerly: its job
-    runs when get() is called, and the DataFrame returned reads the rows
-    decoded then (bounded by _LOCAL_LOOKUP_BYTES), not a lazy plan over
-    enc_df. An explicit `index` keeps the lazy distributed path. Unlike
-    scan()'s range path the index is used even for non-clustered
-    layouts — the prefix-max probe is correct for any overlap pattern,
-    and a point lookup wants the IN-list shape regardless. Decimal keys
-    skip tiers 1–3, an explicit `index` included (their stats hold
-    unscaled integers)."""
-    from pyspark.sql import functions as F
-
-    from . import bloom as _bloom
-
-    spec_by = {s.name: s for s in specs}
-    if key_column not in spec_by:
-        raise KeyError(f"key column {key_column!r} not in projected specs")
-    key_spec = spec_by[key_column]
-    vals = list(values)
-    prunable = not _is_decimal_spec(key_spec)
-    auto = auto_index and index is None and prunable and _is_persisted(enc_df)
-
-    def plan(verify):
-        # tier 1: sorted-index probe per value
-        # a decimal's index holds unscaled integers: never probe it
-        idx, memo = (index if prunable else None), None
-        if auto:
-            token, idx, checked = _memo_index(enc_df, key_column,
-                                              verify=verify)
-        ids = None
-        if idx is not None:
-            try:
-                ids = sorted({i for v in vals for i in idx.lookup(v)})
-            except TypeError:
-                pass  # probe type incomparable with stored stats
-            if ids is not None and len(ids) > _INDEX_ISIN_CAP:
-                ids = None
-            if auto:
-                nbytes = None if ids is None else idx.fetch_bytes(
-                    ids, [s.name for s in specs])
-                memo = ((token,), ids, nbytes, checked)
-
-        def prune(df):
-            if ids is not None:
-                df = df.where(F.col("rg_id").isin(ids))
-            # tier 2a: dictionary-distinct prune (metadata expressions)
-            return prune_rowgroups_isin(df, key_column, vals) \
-                if prunable else df
-
-        return prune, memo
-
-    # tier 2b prep: per-value bloom probe hashes (None = can't disprove)
-    # and per-value page-probe eligibility, computed once driver-side
-    def _page_probeable(v):
-        return prunable and (isinstance(v, (str, bytes)) or (
-            isinstance(v, (int, float)) and not isinstance(v, bool)))
-
-    probes = [(v, _bloom_probe_hashes(v) if prunable else None,
-               _page_probeable(v)) for v in vals]
-    key_i = next(i for i, s in enumerate(specs) if s.name == key_column)
-    sel = [f"{s.name}_blob" for s in specs] + [
-        F.col(f"{key_column}_meta.bloom").alias("__key_bloom")]
-
-    def fn(batches: Iterator[pa.RecordBatch]) -> Iterator[pa.RecordBatch]:
-        for b in batches:
-            tbl = pa.Table.from_batches([b])
-            if tbl.num_rows == 0:
-                continue
-            views = [_blob_views(tbl, f"{s.name}_blob") for s in specs]
-            blooms = tbl.column("__key_bloom").to_pylist()
-            cols = [[] for _ in specs]
-            for i in range(tbl.num_rows):
-                bb = None if blooms[i] is None else bytes(blooms[i])
-                live = [(v, pageable) for v, hs, pageable in probes
-                        if bb is None or hs is None
-                        or bool(_bloom.might_contain(bb, hs).any())]
-                if not live:
-                    continue
-                if any(not pageable for _, pageable in live):
-                    # an un-comparable probe type can't page-prune — the
-                    # whole chunk is the run
-                    runs = [(0, 1 << 31)]
-                else:
-                    # ONE parse (incl. decompression) for all k probes —
-                    # the per-value form re-parsed the key chunk k times
-                    runs = page_filter_row_runs_multi(
-                        views[key_i][i], [v for v, _ in live])
-                    if runs is None:  # no usable page directory
-                        runs = [(0, 1 << 31)]
-                runs, key = _narrow_runs(views[key_i][i], key_spec, runs,
-                                         values=[v for v, _ in live])
-                if not runs:
-                    continue
-                for j in range(len(specs)):
-                    if j == key_i and key is not None:
-                        cols[j].extend(key)  # decoded while narrowing
-                        continue
-                    cds, _ = decode_chunk_rows_multi(views[j][i], runs)
-                    cols[j].extend(_rebuild(cd, specs[j]) for cd in cds)
-            if not cols[0]:
-                continue
-            arrs = [a[0] if len(a) == 1 else pa.concat_arrays(a)
-                    for a in cols]
-            yield pa.RecordBatch.from_arrays(arrs, schema=out_schema)
-
-    # tier 4: exact residual
-    return _lookup(enc_df, out_schema, sel, fn,
-                   F.col(key_column).isin(vals), plan)
+    (sorted_index_for) — even for non-clustered layouts: the prefix-max
+    probe is correct for any overlap pattern — and a lookup whose
+    candidates are small runs as one JVM fetch + an in-process decode
+    (_lookup), eagerly: its job runs when get() is called, and the
+    DataFrame returned reads the rows decoded then (bounded by
+    _LOCAL_LOOKUP_BYTES), not a lazy plan over enc_df. An explicit
+    `index` keeps the lazy distributed path. Decimal keys skip every
+    pruning tier, an explicit `index` included (their stats hold unscaled
+    integers). Raises KeyError when `key_column` is not among `specs`."""
+    return scan(enc_df, specs, out_schema, [(key_column, "in", list(values))],
+                indexes=None if index is None else {key_column: index},
+                auto_index=auto_index)
 
 
 def from_arrow_schema(schema: pa.Schema):

@@ -27,9 +27,11 @@ from collections.abc import Iterator
 import pyarrow as pa
 
 from .engine import (INVARIANT_SCHEMA, _blob_views, _encode_rowgroup,
-                     _invariant_rows, _rebuild, encoded_schema,
+                     _invariant_rows, _read_fn, encoded_schema,
                      from_arrow_schema)
-from .chunk import decode_chunk
+# bound here too so per-module tracing wrappers (perfbench/spans.py) find
+# it; the reads themselves decode through engine's binding (_read_fn)
+from .chunk import decode_chunk  # noqa: F401
 from .schema import ColumnSpec
 
 DEFAULT_BATCH_ROWS = 8192
@@ -478,7 +480,8 @@ def decode_files(spark, enc_path: str | list[str], specs: list[ColumnSpec],
     boundary (unavoidable when the result must be a DataFrame of rows).
     Rows come out in file order, one RecordBatch per row group (worker
     memory stays at one decoded row group); `batch_groups` blob rows are
-    read from the parquet at a time.
+    read from the parquet at a time. The per-task work is the one read
+    operator (engine._read_fn) over the pyarrow-read blob batches.
     """
     blob_cols = [f"{s.name}_blob" for s in specs]
     fs, files = _list_fs(enc_path, filesystem)
@@ -491,24 +494,15 @@ def decode_files(spark, enc_path: str | list[str], specs: list[ColumnSpec],
         pa.field(f.name, pa.binary(), f.nullable)
         if pa.types.is_fixed_size_binary(f.type) else f
         for f in out_schema])
+    read = _read_fn(specs, out_schema)
 
     def fn(paths) -> Iterator[pa.RecordBatch]:
         import pyarrow.parquet as pq
 
         for path in paths:
             pf = pq.ParquetFile(path, filesystem=fs)
-            for rb in pf.iter_batches(batch_size=batch_groups,
-                                      columns=blob_cols):
-                tbl = pa.Table.from_batches([rb])
-                views = [_blob_views(tbl, c) for c in blob_cols]
-                for g in range(rb.num_rows):
-                    cols = []
-                    for j, spec in enumerate(specs):
-                        arr = _rebuild(decode_chunk(views[j][g]), spec)
-                        if pa.types.is_fixed_size_binary(arr.type):
-                            arr = arr.cast(pa.binary())
-                        cols.append(arr)
-                    yield pa.RecordBatch.from_arrays(cols, schema=out_schema)
+            yield from read(pf.iter_batches(batch_size=batch_groups,
+                                            columns=blob_cols))
 
     return _map_units(spark, files, n_tasks, fn, out_schema)
 

@@ -20,8 +20,12 @@ import numpy as np
 import pyarrow as pa
 import pyarrow.parquet as pq
 
-from .engine import _encode_rowgroup, _rebuild, encoded_schema, from_arrow_schema
-from .chunk import decode_chunk
+from .engine import (_encode_rowgroup, _overlaps, _read_fn, encoded_schema,
+                     from_arrow_schema)
+from .files import _pa_of_spec  # one shared phys→Arrow type table
+# bound here too so per-module tracing wrappers (perfbench/spans.py) find
+# it; the reads themselves decode through engine's binding (_read_fn)
+from .chunk import decode_chunk  # noqa: F401
 from .schema import ColumnSpec, specs_from_arrow_schema
 
 FLAT_SCHEMA_FILE = "_flat_schema.arrow"
@@ -179,28 +183,24 @@ def _read_flat(path: str, specs: list[ColumnSpec],
     cols = ["rg_part", "rg_idx", "n_rows"] + [f"{s.name}_blob" for s in sel]
     enc = pa.concat_tables([pq.read_table(f, columns=cols) for f in files])
     order = np.lexsort((np.asarray(enc["rg_idx"]), np.asarray(enc["rg_part"])))
-    n_rows = np.asarray(enc["n_rows"])[order]
-    starts = np.zeros(order.size + 1, dtype=np.int64)
-    np.cumsum(n_rows, out=starts[1:])
-    total = int(starts[-1])
+    n_rows = np.asarray(enc["n_rows"], np.int64)[order]
     lo = max(0, offset)
-    hi = total if count is None else min(total, offset + count)
-    batches = []
-    for pos, i in enumerate(order):
-        if starts[pos + 1] <= lo or starts[pos] >= hi:
-            continue  # row group skipped without decoding
-        arrays = [_rebuild(decode_chunk(enc[f"{s.name}_blob"][int(i)].as_py()), s)
-                  for s in sel]
-        rb = pa.Table.from_arrays(arrays, names=[s.name for s in sel])
-        skip = max(0, lo - int(starts[pos]))
-        take = min(int(starts[pos + 1]), hi) - max(int(starts[pos]), lo)
-        batches.append(rb.slice(skip, take))
-    if not batches:
-        return pa.table({s.name: pa.array([], _rebuild_type(s)) for s in sel})
-    return pa.concat_tables(batches)
+    hi = int(n_rows.sum()) if count is None else offset + count
+    # row groups outside [lo, hi) are skipped without decoding; the
+    # boundary ones decode only the pages under their row run
+    keep, skips, takes = _overlaps(n_rows, lo, hi)
+    picked = order[keep]
+    runs = {int(i): [(int(s), int(s + t))]
+            for i, s, t, n in zip(picked, skips, takes, n_rows[keep])
+            if s != 0 or t != n}
+    enc = enc.append_column("__pos", pa.array(np.arange(enc.num_rows)))
+    out_schema = pa.schema([pa.field(s.name, _pa_of_spec(s)) for s in sel])
 
+    def rows(tbl, views, i):
+        return runs.get(tbl.column("__pos")[i].as_py()), None
 
-def _rebuild_type(spec: ColumnSpec):
-    from .files import _pa_of_spec  # one shared phys→Arrow type table
-
-    return _pa_of_spec(spec)
+    # one zero-copy slice per row group, in (rg_part, rg_idx) order
+    read = _read_fn(sel, out_schema, rows)
+    return pa.Table.from_batches(
+        read(b for i in picked for b in enc.slice(int(i), 1).to_batches()),
+        schema=out_schema)

@@ -114,6 +114,8 @@ def token_stats_sql() -> str:
 
 
 def quality_score_sql() -> str:
+    """Replicates textstats.quality_score joined on doc_id with
+    textstats.fingerprint — the text_quality query's oracle."""
     stop = "[" + ",".join(f"'{s}'" for s in STOPWORDS) + "]"
     return f"""
         WITH w AS (SELECT doc_id, text, {_WS} AS ws FROM documents),
@@ -128,12 +130,13 @@ def quality_score_sql() -> str:
                      round(cast(len(list_distinct(ws)) AS double)
                            / nullif(len(ws), 0), 6) AS distinct_ratio
               FROM w)
-        SELECT doc_id, n_words, stop_ratio, punct_ratio, distinct_ratio,
+        SELECT f.doc_id, n_words, stop_ratio, punct_ratio, distinct_ratio,
                CASE WHEN n_words = 0 THEN 0 ELSE
                cast(least(cast(n_words AS bigint) * 4000, 400000)
                     + least((1500000 * n_stop) // n_words, 300000)
-                    + (300000 * n_distinct) // n_words AS bigint) END AS quality_ppm
-        FROM f"""
+                    + (300000 * n_distinct) // n_words AS bigint) END AS quality_ppm,
+               fp.fp_ordered, fp.fp_bag
+        FROM f JOIN ({fingerprint_sql()}) fp ON f.doc_id = fp.doc_id"""
 
 
 def lang_id_sql() -> str:
