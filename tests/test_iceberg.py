@@ -1315,6 +1315,27 @@ class TestRound5ReviewHardening:
         assert ser_value(Decimal("1.23"), "decimal(10, 2)") == b"\x7b"
         assert ser_value(Decimal("-1.23"), "decimal(10, 2)") == b"\x85"
 
+    def test_decimal_bounds_round_outward(self, tmp_path):
+        """A file's decimal values carrying more fractional digits than
+        the table type's scale: the lower bound rounds down and the upper
+        bound up (half-even gave 1.24 for both 1.235 and 1.245 — above the
+        minimum and below the maximum, so pruning would drop the file)."""
+        from decimal import Decimal
+
+        from tokenc.iceberg import _collect_file_stats
+
+        p = str(tmp_path / "d.parquet")
+        for vals, want in ((["1.235"], ("1.23", "1.24")),
+                           (["1.245"], ("1.24", "1.25")),
+                           (["1.245", "-0.005", "2"], ("-0.01", "2.00"))):
+            pq.write_table(pa.table({"d": pa.array(
+                [Decimal(v) for v in vals], pa.decimal128(9, 3))}), p)
+            lower, upper, _ = _collect_file_stats(
+                pq.ParquetFile(p).metadata, {"d": (1, "decimal(9, 2)")})
+            got = (deser_value(lower[0]["value"], "decimal(9, 2)"),
+                   deser_value(upper[0]["value"], "decimal(9, 2)"))
+            assert got == tuple(Decimal(w) for w in want), vals
+
     def test_uuid_fixed_passthrough(self):
         raw = bytes(range(16))
         assert deser_value(ser_value(raw, "uuid"), "uuid") == raw

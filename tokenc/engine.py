@@ -25,7 +25,7 @@ import hashlib
 import json
 import os
 import zlib
-from collections.abc import Iterator
+from collections.abc import Iterable, Iterator
 
 import numpy as np
 import pyarrow as pa
@@ -489,9 +489,10 @@ def _stat_json(v) -> str:
 
 def _encode_rowgroup(batch: pa.Table, specs: list[ColumnSpec],
                      sel_cache: dict | None = None,
-                     page_bytes: int = DEFAULT_PAGE_BYTES) -> dict:
+                     page_bytes: int = DEFAULT_PAGE_BYTES,
+                     rg_part: int = 0, rg_idx: int = 0) -> dict:
     n_rows = batch.num_rows
-    row: dict = {"n_rows": n_rows}
+    row: dict = {"n_rows": n_rows, "rg_part": rg_part, "rg_idx": rg_idx}
     hasher = hashlib.sha1()
     hasher.update(str(n_rows).encode())
     for spec in specs:
@@ -530,10 +531,46 @@ def _encode_rowgroup(batch: pa.Table, specs: list[ColumnSpec],
     return row
 
 
+def _rowgroups(batches: Iterable[pa.RecordBatch], target_raw_bytes: int,
+               start: int = 0) -> Iterator[tuple[int, pa.Table]]:
+    """The one row-group write loop of every encode driver: batches →
+    (rg_idx, table) per row group. A group closes once it holds
+    `target_raw_bytes` (writer/writer.go:242-257); a batch that would
+    overflow it is cut, zero-copy, where the group reaches the target at
+    that batch's mean row size. rg_idx is the group's first row offset
+    from `start`, so (rg_part, rg_idx) orders rows (reader/reader.go:
+    179-253). A group holds at least one row."""
+    buf: list[pa.RecordBatch] = []
+    size, idx = 0.0, start
+
+    def close():
+        nonlocal buf, size, idx
+        if idx > 0x7FFFFFFF:
+            raise ValueError("row group starts past row 2^31; rg_idx overflow")
+        tbl = pa.Table.from_batches(buf)
+        buf, size, idx = [], 0.0, idx + tbl.num_rows
+        return idx - tbl.num_rows, tbl
+
+    for b in batches:
+        n, lo = b.num_rows, 0
+        row_bytes = max(b.nbytes, 1) / max(n, 1)
+        while lo < n:
+            fit = int((target_raw_bytes - size) / row_bytes)
+            take = min(n - lo, max(fit, 0 if buf else 1))
+            buf.append(b.slice(lo, take))
+            lo += take
+            size += take * row_bytes
+            if lo < n or size >= target_raw_bytes:
+                yield close()
+    if buf:
+        yield close()
+
+
 def make_encoder(specs: list[ColumnSpec],
                  target_raw_bytes: int = DEFAULT_TARGET_RAW_BYTES,
                  page_bytes: int = DEFAULT_PAGE_BYTES):
-    """mapInArrow function: input batches → encoded row-group rows."""
+    """mapInArrow function: input batches → encoded row-group rows
+    (`_rowgroups` groups; rg_part = the partition id)."""
     out_schema = encoded_schema(specs)
 
     def encode_fn(batches: Iterator[pa.RecordBatch]) -> Iterator[pa.RecordBatch]:
@@ -541,46 +578,11 @@ def make_encoder(specs: list[ColumnSpec],
 
         ctx = TaskContext.get()
         part_id = ctx.partitionId() if ctx is not None else 0
-        buf: list[pa.RecordBatch] = []
-        buf_bytes = 0
-        rg_idx = 0
         sel_cache = selector.WORKER_MEMO  # per-WORKER memo (reused tasks)
-
-        def flush():
-            nonlocal buf, buf_bytes, rg_idx
-            if not buf:
-                return None
-            tbl = pa.Table.from_batches(buf)
-            row = _encode_rowgroup(tbl, specs, sel_cache, page_bytes)
-            # (rg_part, rg_idx) is a total order over row groups whenever the
-            # input partitioning is ordered (e.g. repartitionByRange + sort):
-            # the SkipRows/ReadByNumber cursor analog (reader/reader.go:179-253)
-            row["rg_part"] = part_id
-            row["rg_idx"] = rg_idx
-            rg_idx += 1
-            buf = []
-            buf_bytes = 0
-            return pa.RecordBatch.from_pylist([row], schema=out_schema)
-
-        for b in batches:
-            # split oversized incoming batches (zero-copy slices) so row
-            # groups honor target_raw_bytes even when Arrow hands us one
-            # giant batch — rowgroup sizing analog of writer/writer.go:242-257
-            if b.num_rows and b.nbytes > target_raw_bytes:
-                rows_per = max(1, int(b.num_rows * target_raw_bytes / b.nbytes))
-                parts = [b.slice(o, rows_per) for o in range(0, b.num_rows, rows_per)]
-            else:
-                parts = [b]
-            for p in parts:
-                buf.append(p)
-                buf_bytes += p.nbytes
-                if buf_bytes >= target_raw_bytes:
-                    out = flush()
-                    if out is not None:
-                        yield out
-        out = flush()
-        if out is not None:
-            yield out
+        for rg_idx, tbl in _rowgroups(batches, target_raw_bytes):
+            row = _encode_rowgroup(tbl, specs, sel_cache, page_bytes,
+                                   rg_part=part_id, rg_idx=rg_idx)
+            yield pa.RecordBatch.from_pylist([row], schema=out_schema)
 
     return encode_fn, out_schema
 
@@ -715,14 +717,10 @@ def _invariant_rows(blob_views: list[list[np.ndarray]],
     return rows
 
 
-def decode_invariants(enc_df, specs: list[ColumnSpec], out_schema: pa.Schema):
-    """Decode every chunk and reduce to order-insensitive per-row-group
-    invariants INSIDE the UDF (row count, value count, numeric value sum,
-    raw byte sum of string columns) — one tiny output row per column per
-    row group. This forces the full decode compute while keeping the
-    Python→JVM boundary at row-group granularity; comparing against the
-    same aggregates on the source proves decode correctness at any scale
-    (the bit-exact per-row gate lives in pytest at small scale)."""
+def _invariants_fn(specs: list[ColumnSpec]):
+    """The invariants twin of `_read_fn`: the one per-batch function
+    decode_invariants and files.decode_invariants_files run over batches
+    of blob rows (one row group per row) → INVARIANT_SCHEMA rows."""
 
     def fn(batches: Iterator[pa.RecordBatch]) -> Iterator[pa.RecordBatch]:
         for b in batches:
@@ -732,7 +730,19 @@ def decode_invariants(enc_df, specs: list[ColumnSpec], out_schema: pa.Schema):
             if rows:
                 yield pa.RecordBatch.from_pylist(rows, schema=INVARIANT_SCHEMA)
 
-    return enc_df.mapInArrow(fn, from_arrow_schema(INVARIANT_SCHEMA))
+    return fn
+
+
+def decode_invariants(enc_df, specs: list[ColumnSpec], out_schema: pa.Schema):
+    """Decode every chunk and reduce to order-insensitive per-row-group
+    invariants INSIDE the UDF (row count, value count, numeric value sum,
+    raw byte sum of string columns) — one tiny output row per column per
+    row group. This forces the full decode compute while keeping the
+    Python→JVM boundary at row-group granularity; comparing against the
+    same aggregates on the source proves decode correctness at any scale
+    (the bit-exact per-row gate lives in pytest at small scale)."""
+    return enc_df.mapInArrow(_invariants_fn(specs),
+                             from_arrow_schema(INVARIANT_SCHEMA))
 
 
 def read_range(enc_df, specs: list[ColumnSpec], out_schema: pa.Schema,

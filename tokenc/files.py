@@ -26,9 +26,8 @@ from collections.abc import Iterator
 
 import pyarrow as pa
 
-from .engine import (INVARIANT_SCHEMA, _blob_views, _encode_rowgroup,
-                     _invariant_rows, _read_fn, encoded_schema,
-                     from_arrow_schema)
+from .engine import (INVARIANT_SCHEMA, _encode_rowgroup, _invariants_fn,
+                     _read_fn, _rowgroups, encoded_schema, from_arrow_schema)
 # bound here too so per-module tracing wrappers (perfbench/spans.py) find
 # it; the reads themselves decode through engine's binding (_read_fn)
 from .chunk import decode_chunk  # noqa: F401
@@ -305,17 +304,20 @@ def encode_files(spark, src_path: str | list[str], specs: list[ColumnSpec], *,
                  column_resolution: dict | None = None):
     """Encode the parquet files under `src_path` → encoded row-group DF.
 
-    Each task owns an ordered slice of (file, row-group-range): rg_part is
-    the global file index and rg_idx is the flush's STARTING ROW OFFSET
-    within the file, so (rg_part, rg_idx) orders rows by exact file position
-    for read_range even when a parquet row group spans multiple flushes or
-    `tasks_per_file` splits one file across tasks. Splits own CONTIGUOUS
-    parquet row-group ranges (balance without a shuffle, order preserved).
+    Each task owns an ordered slice of (file, row-group-range) and feeds
+    each split's surviving rows through the one write loop
+    (engine._rowgroups, `target_raw_bytes` per row group): rg_part is the
+    global file index and rg_idx the group's first row offset within the
+    file (with deletes: the split's first PRE-delete row plus the
+    surviving rows before the group), so (rg_part, rg_idx) orders rows by
+    file position for read_range even when a parquet row group spans
+    several encoded groups or `tasks_per_file` splits one file across
+    tasks. Splits own CONTIGUOUS parquet row-group ranges (balance without
+    a shuffle, order preserved).
 
     `delete_files` are Iceberg-style position-delete parquet paths
     (file_path, pos): each task masks its own file's deleted row positions
-    before encoding (rg_idx stays the PRE-delete file offset — still a
-    total order).
+    before encoding.
 
     `equality_deletes` are Iceberg v2 equality-delete descriptors
     ({path, seq, cols, cands}, from tokenc.iceberg.encode_iceberg): each
@@ -395,80 +397,62 @@ def encode_files(spark, src_path: str | list[str], specs: list[ColumnSpec], *,
                 # physical column purely to carry the row count
                 read_cols = [pf.schema_arrow.names[0]]
 
-            def remap_batch(rb: pa.RecordBatch) -> pa.RecordBatch:
-                arrays = []
-                for w in wanted:
-                    fn = read_map[w]
-                    arrays.append(
-                        pa.nulls(rb.num_rows,
-                                 _pa_of_spec(spec_by[w])
-                                 if w in spec_by else eq_type[w])
-                        if fn is None else
-                        rb.column(rb.schema.names.index(fn)))
-                rb2 = pa.RecordBatch.from_arrays(arrays, names=wanted)
-                if eq_tables:
-                    keep = _eq_keep_mask(rb2, eq_tables)
-                    if not keep.all():
-                        rb2 = rb2.filter(pa.array(keep))
-                return rb2.select(cols) if wanted != cols else rb2
-            # rg_idx = absolute starting row offset of the flush in the
-            # file: a total file-position order no matter how parquet
-            # row groups and flush boundaries interleave. With deletes
-            # it stays the PRE-delete offset (offsets remain strictly
-            # increasing, which is all the ordering contract needs).
-            row_off = sum(pf.metadata.row_group(g).num_rows
-                          for g in range(lo_rg))
-            file_pos = row_off  # pre-delete read cursor
-            buf: list[pa.RecordBatch] = []
-            buf_bytes = 0
-            buf_src_rows = 0
+            def src_batches(file_pos: int) -> Iterator[pa.RecordBatch]:
+                import numpy as np
 
-            def flush():
-                nonlocal buf, buf_bytes, buf_src_rows, row_off
-                if not buf:
-                    return None
-                tbl = pa.Table.from_batches(buf)
-                if row_off > 0x7FFFFFFF:
-                    raise ValueError("file exceeds 2^31 rows; rg_idx overflow")
-                start = row_off
-                row_off += buf_src_rows
-                buf = []
-                buf_bytes = 0
-                buf_src_rows = 0
-                if tbl.num_rows == 0:  # every buffered row deleted
-                    return None
-                row = _encode_rowgroup(tbl, specs, sel_cache)
-                row["rg_part"] = file_idx
-                row["rg_idx"] = start
-                return pa.RecordBatch.from_pylist([row], schema=out_schema)
+                for rb in pf.iter_batches(batch_size=DEFAULT_BATCH_ROWS,
+                                          row_groups=rgs, columns=read_cols):
+                    n = rb.num_rows
+                    keep = np.ones(n, dtype=bool)
+                    if dels is not None and len(dels):
+                        # position deletes index PRE-delete file positions
+                        lo, hi = np.searchsorted(dels, [file_pos, file_pos + n])
+                        keep[dels[lo:hi] - file_pos] = False
+                    file_pos += n
+                    if remap:
+                        rb = pa.RecordBatch.from_arrays([
+                            pa.nulls(n, _pa_of_spec(spec_by[w])
+                                     if w in spec_by else eq_type[w])
+                            if (fn := read_map[w]) is None else
+                            rb.column(rb.schema.names.index(fn))
+                            for w in wanted], names=wanted)
+                        if eq_tables:
+                            keep &= _eq_keep_mask(rb, eq_tables)
+                        rb = rb.select(cols)
+                    yield rb if keep.all() else rb.filter(pa.array(keep))
 
-            for rb in pf.iter_batches(batch_size=DEFAULT_BATCH_ROWS,
-                                      row_groups=rgs, columns=read_cols):
-                n_src = rb.num_rows
-                if dels is not None and len(dels):
-                    import numpy as np
-
-                    lo = np.searchsorted(dels, file_pos)
-                    hi = np.searchsorted(dels, file_pos + n_src)
-                    if hi > lo:
-                        mask = np.ones(n_src, dtype=bool)
-                        mask[dels[lo:hi] - file_pos] = False
-                        rb = rb.filter(pa.array(mask))
-                file_pos += n_src
-                if remap:
-                    rb = remap_batch(rb)
-                buf.append(rb)
-                buf_bytes += rb.nbytes
-                buf_src_rows += n_src
-                if buf_bytes >= target_raw_bytes:
-                    out = flush()
-                    if out is not None:
-                        yield out
-            out = flush()
-            if out is not None:
-                yield out
+            # the split's first PRE-delete row: deleted rows keep
+            # offsets strictly increasing across the splits of a file
+            base = sum(pf.metadata.row_group(g).num_rows
+                       for g in range(lo_rg))
+            for rg_idx, tbl in _rowgroups(src_batches(base),
+                                          target_raw_bytes, base):
+                row = _encode_rowgroup(tbl, specs, sel_cache,
+                                       rg_part=file_idx, rg_idx=rg_idx)
+                yield pa.RecordBatch.from_pylist([row], schema=out_schema)
 
     return _map_units(spark, units, n_tasks, encode_fn, out_schema)
+
+
+def _map_blob_files(spark, enc_path, specs: list[ColumnSpec],
+                    batch_groups: int, n_tasks: int | None, filesystem,
+                    batch_fn, schema: pa.Schema):
+    """The file-granular decode drivers' task loop: each blob file under
+    `enc_path` in order, `batch_groups` blob rows at a time → `batch_fn`."""
+    blob_cols = [f"{s.name}_blob" for s in specs]
+    fs, files = _list_fs(enc_path, filesystem)
+    if not files:
+        raise ValueError(f"no parquet files under {enc_path}")
+
+    def fn(paths) -> Iterator[pa.RecordBatch]:
+        import pyarrow.parquet as pq
+
+        for path in paths:
+            pf = pq.ParquetFile(path, filesystem=fs)
+            yield from batch_fn(pf.iter_batches(batch_size=batch_groups,
+                                                columns=blob_cols))
+
+    return _map_units(spark, files, n_tasks, fn, schema)
 
 
 def decode_files(spark, enc_path: str | list[str], specs: list[ColumnSpec],
@@ -483,10 +467,6 @@ def decode_files(spark, enc_path: str | list[str], specs: list[ColumnSpec],
     read from the parquet at a time. The per-task work is the one read
     operator (engine._read_fn) over the pyarrow-read blob batches.
     """
-    blob_cols = [f"{s.name}_blob" for s in specs]
-    fs, files = _list_fs(enc_path, filesystem)
-    if not files:
-        raise ValueError(f"no parquet files under {enc_path}")
     # Spark has no FixedSizeBinary type: FLBA columns surface as plain
     # binary at the DataFrame boundary (exactly Spark's own FLBA-parquet
     # behavior); Arrow-native consumers use tokenc.local for the exact type
@@ -494,17 +474,9 @@ def decode_files(spark, enc_path: str | list[str], specs: list[ColumnSpec],
         pa.field(f.name, pa.binary(), f.nullable)
         if pa.types.is_fixed_size_binary(f.type) else f
         for f in out_schema])
-    read = _read_fn(specs, out_schema)
-
-    def fn(paths) -> Iterator[pa.RecordBatch]:
-        import pyarrow.parquet as pq
-
-        for path in paths:
-            pf = pq.ParquetFile(path, filesystem=fs)
-            yield from read(pf.iter_batches(batch_size=batch_groups,
-                                            columns=blob_cols))
-
-    return _map_units(spark, files, n_tasks, fn, out_schema)
+    return _map_blob_files(spark, enc_path, specs, batch_groups, n_tasks,
+                           filesystem, _read_fn(specs, out_schema),
+                           out_schema)
 
 
 def decode_invariants_files(spark, enc_path: str | list[str],
@@ -517,23 +489,6 @@ def decode_invariants_files(spark, enc_path: str | list[str],
     encode_files it keeps the whole hot loop columnar (parquet page →
     Arrow buffer → numpy view → decode kernels) with zero JVM involvement
     beyond task scheduling."""
-    blob_cols = [f"{s.name}_blob" for s in specs]
-    fs, files = _list_fs(enc_path, filesystem)
-    if not files:
-        raise ValueError(f"no parquet files under {enc_path}")
-
-    def fn(paths) -> Iterator[pa.RecordBatch]:
-        import pyarrow.parquet as pq
-
-        for path in paths:
-            pf = pq.ParquetFile(path, filesystem=fs)
-            rows = []
-            for rb in pf.iter_batches(batch_size=batch_groups,
-                                      columns=blob_cols):
-                tbl = pa.Table.from_batches([rb])
-                views = [_blob_views(tbl, c) for c in blob_cols]
-                rows.extend(_invariant_rows(views, specs))
-            if rows:
-                yield pa.RecordBatch.from_pylist(rows, schema=INVARIANT_SCHEMA)
-
-    return _map_units(spark, files, n_tasks, fn, INVARIANT_SCHEMA)
+    return _map_blob_files(spark, enc_path, specs, batch_groups, n_tasks,
+                           filesystem, _invariants_fn(specs),
+                           INVARIANT_SCHEMA)

@@ -38,6 +38,7 @@ import os
 import re
 import struct
 from dataclasses import dataclass, field
+from decimal import ROUND_CEILING, ROUND_FLOOR, ROUND_HALF_EVEN, Decimal
 
 from .avro import read_ocf, write_ocf
 from .files import resolve_fs
@@ -101,14 +102,29 @@ def ser_value(v, ice_type: str) -> bytes:
             or ice_type.startswith("fixed"):
         return bytes(v)
     if ice_type.startswith("decimal"):
-        # spec: unscaled value, two's-complement BIG-endian, minimum bytes
-        from decimal import Decimal
-
-        unscaled = int(Decimal(v).scaleb(_decimal_scale(ice_type))
-                       .to_integral_value())
-        n = max(1, (unscaled.bit_length() + 8) // 8)  # +sign bit headroom
-        return unscaled.to_bytes(n, "big", signed=True)
+        return _ser_decimal(v, ice_type, ROUND_HALF_EVEN)
     raise ValueError(f"no single-value serialization for {ice_type!r}")
+
+
+def _ser_decimal(v, ice_type: str, rounding: str) -> bytes:
+    # spec: unscaled value, two's-complement BIG-endian, minimum bytes
+    unscaled = int(Decimal(v).scaleb(_decimal_scale(ice_type))
+                   .to_integral_value(rounding))
+    n = max(1, (unscaled.bit_length() + 8) // 8)  # +sign bit headroom
+    return unscaled.to_bytes(n, "big", signed=True)
+
+
+def _ser_bound(v, ice_type: str, upper: bool) -> bytes | None:
+    """ser_value for a lower/upper bound (None stays None): a decimal with
+    more fractional digits than the type's scale rounds OUTWARD — FLOOR
+    for a lower bound, CEILING for an upper one — so the bound still
+    covers the value it stands for."""
+    if v is None:
+        return None
+    if ice_type.startswith("decimal"):
+        return _ser_decimal(v, ice_type,
+                            ROUND_CEILING if upper else ROUND_FLOOR)
+    return ser_value(v, ice_type)
 
 
 def deser_value(b: bytes, ice_type: str):
@@ -131,8 +147,6 @@ def deser_value(b: bytes, ice_type: str):
             or ice_type.startswith("fixed"):
         return bytes(b)
     if ice_type.startswith("decimal"):
-        from decimal import Decimal
-
         unscaled = int.from_bytes(b, "big", signed=True)
         return Decimal(unscaled).scaleb(-_decimal_scale(ice_type))
     raise ValueError(f"no single-value serialization for {ice_type!r}")
@@ -1068,8 +1082,8 @@ def _collect_file_stats(md, name2ft: dict):
                 lo = _trunc_lower(lo)
                 hi = _trunc_upper(hi)
             try:
-                lo_b = ser_value(lo, ice)
-                hi_b = ser_value(hi, ice) if hi is not None else None
+                lo_b = _ser_bound(lo, ice, upper=False)
+                hi_b = _ser_bound(hi, ice, upper=True)
             except (ValueError, TypeError):
                 # a type without single-value serialization: publish the
                 # file WITHOUT bounds for this column (unbounded = sound)
@@ -1412,10 +1426,8 @@ def build_table(table_dir: str, data_files: list[str], *,
                 csummaries.append({
                     "contains_null": s["contains_null"],
                     "contains_nan": None,
-                    "lower_bound": (ser_value(s["lo"], ice)
-                                    if s["lo"] is not None else None),
-                    "upper_bound": (ser_value(s["hi"], ice)
-                                    if s["hi"] is not None else None)})
+                    "lower_bound": _ser_bound(s["lo"], ice, upper=False),
+                    "upper_bound": _ser_bound(s["hi"], ice, upper=True)})
         carry_mrec = {
             "manifest_path": "file://" + cpath,
             "manifest_length": len(cblob), "partition_spec_id": 0,
@@ -1445,10 +1457,8 @@ def build_table(table_dir: str, data_files: list[str], *,
             ice = _part_value_type(ps, name2ft)
             summaries.append({
                 "contains_null": s["contains_null"], "contains_nan": None,
-                "lower_bound": (ser_value(s["lo"], ice)
-                                if s["lo"] is not None else None),
-                "upper_bound": (ser_value(s["hi"], ice)
-                                if s["hi"] is not None else None)})
+                "lower_bound": _ser_bound(s["lo"], ice, upper=False),
+                "upper_bound": _ser_bound(s["hi"], ice, upper=True)})
     mrecs = [
         {"manifest_path": "file://" + path,
          "manifest_length": len(b), "partition_spec_id": 0,

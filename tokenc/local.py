@@ -20,8 +20,8 @@ import numpy as np
 import pyarrow as pa
 import pyarrow.parquet as pq
 
-from .engine import (_encode_rowgroup, _overlaps, _read_fn, encoded_schema,
-                     from_arrow_schema)
+from .engine import (_encode_rowgroup, _overlaps, _read_fn, _rowgroups,
+                     encoded_schema, from_arrow_schema)
 from .files import _pa_of_spec  # one shared phys→Arrow type table
 # bound here too so per-module tracing wrappers (perfbench/spans.py) find
 # it; the reads themselves decode through engine's binding (_read_fn)
@@ -46,7 +46,9 @@ def write_table(table: pa.Table, out_dir: str, *,
                 codec_overrides: dict[str, str] | None = None,
                 compression: dict[str, str] | str | None = None,
                 target_raw_bytes: int = 32 << 20) -> list[ColumnSpec]:
-    """Encode a pyarrow Table into `out_dir` (one parquet of blob rows).
+    """Encode a pyarrow Table into `out_dir` (one parquet of blob rows),
+    cut into row groups of `target_raw_bytes` by the one write loop
+    (engine._rowgroups): rg_part 0, rg_idx the group's first row.
 
     Composite columns are shredded to flat leaves first (same decomposition
     and flat names as the Spark path); the nested and flat schemas are
@@ -70,20 +72,11 @@ def write_table(table: pa.Table, out_dir: str, *,
                                         compression)
     with open(os.path.join(out_dir, FLAT_SCHEMA_FILE), "wb") as f:
         f.write(table.schema.serialize().to_pybytes())
-    out_schema = encoded_schema(specs)
-    rows = []
-    n = table.num_rows
-    rows_per = max(1, int(n * target_raw_bytes / max(table.nbytes, 1))) if n else n
-    rg_idx = 0
     sel_cache: dict = {}
-    for lo in range(0, n, rows_per or 1):
-        part = table.slice(lo, rows_per)
-        row = _encode_rowgroup(part.combine_chunks(), specs, sel_cache)
-        row["rg_part"] = 0
-        row["rg_idx"] = rg_idx
-        rg_idx += 1
-        rows.append(row)
-    enc = pa.Table.from_pylist(rows, schema=out_schema)
+    rows = [_encode_rowgroup(part, specs, sel_cache, rg_idx=rg_idx)
+            for rg_idx, part in _rowgroups(table.to_batches(),
+                                           target_raw_bytes)]
+    enc = pa.Table.from_pylist(rows, schema=encoded_schema(specs))
     pq.write_table(enc, os.path.join(out_dir, "part-00000.parquet"),
                    compression="zstd")
     return specs
